@@ -23,13 +23,6 @@ def stable_avg_cents(col: Column | str, ndigits: int = 4) -> Column:
     return F.round(F.sum(cents) / 100.0 / F.count("*"), ndigits)
 
 
-def stable_avg_cents_sql(col: str, ndigits: int = 4) -> str:
-    """DuckDB mirror of :func:`stable_avg_cents`."""
-    return (
-        f"round(sum(CAST(round({col} * 100) AS BIGINT)) / 100.0 / count(*), {ndigits})"
-    )
-
-
 def stable_sum_micros(col: Column | str, ndigits: int = 4) -> Column:
     """Order-independent float sum for oracle-compared output: quantize
     each value to integer micros (half-up), sum as BIGINT (associative

@@ -274,7 +274,8 @@ def kmedoids(
     # would actually cost).
     src_level = features.storageLevel
     features = features.select(*FEATURE_COLS)
-    if not (src_level.useMemory or src_level.useDisk):
+    owns_features = not (src_level.useMemory or src_level.useDisk)
+    if owns_features:
         features = features.persist()
 
     # Iterate over the combo-compressed table: one full-data shuffle up
@@ -313,114 +314,123 @@ def kmedoids(
         pool = ThreadPoolExecutor(max_workers=1)
         head_future = pool.submit(_probe)
 
-    if seeds is None:
-        from mapreduce6240project_spark.operators.sampling import seed_hash
+    try:
+        if seeds is None:
+            from mapreduce6240project_spark.operators.sampling import seed_hash
 
-        # Fused seed draw + medoid feature fetch: TakeOrdered of the
-        # full feature rows by the same (LCG hash, id) key returns the
-        # seed rows directly -- ONE job instead of the former two
-        # (sample_k_seeds collect + _collect_medoids collect), and at
-        # scale a per-partition top-k instead of a full distinct
-        # shuffle of every id (r10 optimization, guide section 2.4).
-        # The draw is over k+1 rows (r11, ADVICE): equal-id rows sort
-        # adjacently, so a duplicate of any of the first k-1 seed ids
-        # is visible within the first k rows, and a duplicate of the
-        # k-th seed id is visible in row k+1 -- the one case limit(k)
-        # could not see (it kept the seed ids correct but picked the
-        # k-th medoid's features from an arbitrary copy).  Any
-        # duplicate among the k+1 rows falls back to the original
-        # distinct-draw path.
-        try:
+            # Fused seed draw + medoid feature fetch: TakeOrdered of the
+            # full feature rows by the same (LCG hash, id) key returns the
+            # seed rows directly -- ONE job instead of the former two
+            # (sample_k_seeds collect + _collect_medoids collect), and at
+            # scale a per-partition top-k instead of a full distinct
+            # shuffle of every id (r10 optimization, guide section 2.4).
+            # The draw is over k+1 rows (r11, ADVICE): equal-id rows sort
+            # adjacently, so a duplicate of any of the first k-1 seed ids
+            # is visible within the first k rows, and a duplicate of the
+            # k-th seed id is visible in row k+1 -- the one case limit(k)
+            # could not see (it kept the seed ids correct but picked the
+            # k-th medoid's features from an arbitrary copy).  Any
+            # duplicate among the k+1 rows falls back to the original
+            # distinct-draw path.
             rows = (
                 features.orderBy(seed_hash("tweet_id"), F.col("tweet_id"))
                 .limit(k + 1)
                 .collect()
             )
-        except BaseException:
-            if pool is not None:
-                pool.shutdown(wait=False)
-            raise
-        take = rows[:k]
-        seeds = [int(r["tweet_id"]) for r in take]
-        # equal ids sort adjacently: any duplicate of seeds[0..k-2] is
-        # already inside the first k rows, and a duplicate of the k-th
-        # seed can only sit at row k+1 -- so these two checks cover
-        # every duplicated seed id (fewer than k rows = a short draw,
-        # handled like the old path: unique ids are accepted as-is)
-        if len(set(seeds)) == len(seeds) and (
-            len(rows) <= k or int(rows[k]["tweet_id"]) != seeds[-1]
-        ):
-            medoids = [{c: r[c] for c in FEATURE_COLS} for r in take]
+            take = rows[:k]
+            seeds = [int(r["tweet_id"]) for r in take]
+            # equal ids sort adjacently: any duplicate of seeds[0..k-2] is
+            # already inside the first k rows, and a duplicate of the k-th
+            # seed can only sit at row k+1 -- so these two checks cover
+            # every duplicated seed id (fewer than k rows = a short draw,
+            # handled like the old path: unique ids are accepted as-is)
+            if len(set(seeds)) == len(seeds) and (
+                len(rows) <= k or int(rows[k]["tweet_id"]) != seeds[-1]
+            ):
+                medoids = [{c: r[c] for c in FEATURE_COLS} for r in take]
+            else:
+                from mapreduce6240project_spark.operators.sampling import (
+                    sample_k_seeds,
+                )
+
+                seeds = [int(r.tweet_id) for r in sample_k_seeds(features, k).collect()]
+                medoids = _collect_medoids(features, seeds)
         else:
-            from mapreduce6240project_spark.operators.sampling import (
-                sample_k_seeds,
-            )
-
-            seeds = [int(r.tweet_id) for r in sample_k_seeds(features, k).collect()]
+            seeds = [int(s) for s in seeds]
             medoids = _collect_medoids(features, seeds)
-    else:
-        seeds = [int(s) for s in seeds]
-        medoids = _collect_medoids(features, seeds)
-    k = len(seeds)
+        k = len(seeds)
 
-    result = KMedoidsResult(assignments=features, medoids=medoids)
+        result = KMedoidsResult(assignments=features, medoids=medoids)
 
-    if head_future is not None:
-        head = head_future.result()
-        pool.shutdown(wait=False)
-    elif update_cap is None:
-        head = _probe()
-    else:
-        head = None
+        if head_future is not None:
+            head = head_future.result()
+        elif update_cap is None:
+            head = _probe()
+        else:
+            head = None
 
-    if head is not None and len(head) <= driver_combo_threshold:
-        combo_rows = [r.asDict() for r in head]
+        if head is not None and len(head) <= driver_combo_threshold:
+            combo_rows = [r.asDict() for r in head]
+            combos.unpersist()
+            medoids = _iterate_driver_side(
+                combo_rows, medoids, max_iter, tol, weighted, result
+            )
+            # combo rows carry the weight column `n`; the public medoid dicts
+            # are feature rows only (same shape as the distributed path's
+            # _collect_medoids result)
+            medoids = [{k: m[k] for k in FEATURE_COLS} for m in medoids]
+            result.assignments = assign_clusters(features, medoids, weighted)
+            result.medoids = medoids
+            return result
+
+        # Distributed branch: the truncated limit-probe above only commits
+        # cache partitions whose iterators were fully consumed, so the
+        # combo cache is at best partially built here.  Materialize it
+        # eagerly ONCE so every loop iteration reads the cache instead of
+        # the first iteration silently re-paying the full combo shuffle
+        # (r11, VERDICT item 2; guide section 5).
+        combos.count()
+        assigned = assign_clusters(combos, medoids, weighted)
+        for it in range(1, max_iter + 1):
+            result.iterations = it
+            new_ids_rows = update_medoids(assigned, weighted, update_cap).collect()
+            new_ids = [r.tweet_id for r in sorted(new_ids_rows, key=lambda r: r.cluster)]
+            # clusters can be empty (id missing) -- keep the old medoid then
+            old_by_idx = {i: m for i, m in enumerate(medoids)}
+            got = _collect_medoids(features, new_ids) if new_ids else []
+            by_cluster = dict(zip((r.cluster for r in sorted(new_ids_rows, key=lambda r: r.cluster)), got))
+            new_medoids = [by_cluster.get(i, old_by_idx[i]) for i in range(k)]
+
+            displacement = [
+                _py_distance(old, new, weighted)
+                for old, new in zip(medoids, new_medoids)
+            ]
+            result.history.append(displacement)
+            medoids = new_medoids
+            assigned = assign_clusters(combos, medoids, weighted)
+            if all(d <= tol for d in displacement):
+                result.converged = True
+                break
+
         combos.unpersist()
-        medoids = _iterate_driver_side(
-            combo_rows, medoids, max_iter, tol, weighted, result
-        )
-        # combo rows carry the weight column `n`; the public medoid dicts
-        # are feature rows only (same shape as the distributed path's
-        # _collect_medoids result)
-        medoids = [{k: m[k] for k in FEATURE_COLS} for m in medoids]
+        # single narrow pass materializes the per-member assignment
         result.assignments = assign_clusters(features, medoids, weighted)
         result.medoids = medoids
         return result
-
-    # Distributed branch: the truncated limit-probe above only commits
-    # cache partitions whose iterators were fully consumed, so the
-    # combo cache is at best partially built here.  Materialize it
-    # eagerly ONCE so every loop iteration reads the cache instead of
-    # the first iteration silently re-paying the full combo shuffle
-    # (r11, VERDICT item 2; guide section 5).
-    combos.count()
-    assigned = assign_clusters(combos, medoids, weighted)
-    for it in range(1, max_iter + 1):
-        result.iterations = it
-        new_ids_rows = update_medoids(assigned, weighted, update_cap).collect()
-        new_ids = [r.tweet_id for r in sorted(new_ids_rows, key=lambda r: r.cluster)]
-        # clusters can be empty (id missing) -- keep the old medoid then
-        old_by_idx = {i: m for i, m in enumerate(medoids)}
-        got = _collect_medoids(features, new_ids) if new_ids else []
-        by_cluster = dict(zip((r.cluster for r in sorted(new_ids_rows, key=lambda r: r.cluster)), got))
-        new_medoids = [by_cluster.get(i, old_by_idx[i]) for i in range(k)]
-
-        displacement = [
-            _py_distance(old, new, weighted)
-            for old, new in zip(medoids, new_medoids)
-        ]
-        result.history.append(displacement)
-        medoids = new_medoids
-        assigned = assign_clusters(combos, medoids, weighted)
-        if all(d <= tol for d in displacement):
-            result.converged = True
-            break
-
-    combos.unpersist()
-    # single narrow pass materializes the per-member assignment
-    result.assignments = assign_clusters(features, medoids, weighted)
-    result.medoids = medoids
-    return result
+    except BaseException:
+        # Release what this call persisted.  Wait for the probe first:
+        # a probe still running would otherwise fill the combo cache
+        # after the unpersist and leave its blocks behind.  The error
+        # re-raised is this thread's; a probe error is dropped.
+        if head_future is not None:
+            head_future.exception()
+        combos.unpersist()
+        if owns_features:
+            features.unpersist()
+        raise
+    finally:
+        if pool is not None:
+            pool.shutdown(wait=False)
 
 
 def elbow(

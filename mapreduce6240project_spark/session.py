@@ -13,6 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Entries in Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``, default 100).  The cache is LRU, so a workload that
+#: cycles through more distinct classes than it holds misses on every
+#: access: each warm round recompiles its code with Janino and HotSpot
+#: JIT-compiles the new classes again.  Measured working sets: the
+#: perfbench joins-txlog-10x round needs 123 classes, bench.py's 15
+#: headline queries 214, kmedoids-sf0.1 fewer than 100.  The full
+#: registry at sf0.001 compiles 5,470 classes; metaspace grew 91 -> 304
+#: MB over that run, i.e. <= ~40 KB per class, so 1000 entries cost at
+#: most ~40 MB off-heap.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "mapreduce6240project_spark",
@@ -60,6 +72,7 @@ def get_spark(
         # Spark's vectorized reader rejects by default; read them as raw
         # nanosecond longs and convert centrally in sources.tables.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -1,4 +1,4 @@
-"""Optional-format connectors: lakehouse table formats and JDBC.
+"""Optional-format connectors: lakehouse table formats.
 
 The engine's IO core (parquet/CSV/TSV/JSON/text) needs nothing beyond
 stock Spark and is exercised by the registry round-trip queries.  The
@@ -66,29 +66,3 @@ def read_lakehouse(spark: SparkSession, path: str, fmt: str = "delta") -> DataFr
             f"{fmt} runtime package to enable."
         )
     return spark.read.format(fmt).load(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """Partitioned JDBC source.  Without a driver jar Spark raises its
-    own clear error at load time; the partitioning options here are the
-    part that matters at scale (parallel range reads, not one cursor)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound if lower_bound is not None else 0))
-            .option("upperBound", str(upper_bound if upper_bound is not None else 1 << 31))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.distance import HASHTAG_WEIGHT
@@ -83,3 +84,35 @@ def test_cluster_cost_matches_python(feats):
     for k, (n, c) in want.items():
         assert got[k][0] == n
         assert math.isclose(got[k][1], round(c, 4), rel_tol=1e-6)
+
+
+def _cache_state(spark):
+    """(cached-data entries of the session's CacheManager, persisted RDD ids)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return field.get(cm).size(), sorted(int(i) for i in rdds.keySet())
+
+
+@pytest.mark.parametrize("input_cached", [True, False])
+def test_unknown_seeds_release_caches(spark, feats, input_cached):
+    # a filter gives a plan the session has not cached, so kmedoids
+    # persists its own projection of it
+    src = feats if input_cached else feats.filter(F.col("tweet_id") > 0)
+    before = _cache_state(spark)
+    with pytest.raises(ValueError, match="seed medoid ids not found"):
+        kmedoids(src, seeds=[-1, -2, -3])
+    assert _cache_state(spark) == before
+
+
+def test_failed_seed_draw_waits_for_probe_and_releases(spark, feats):
+    # Every row fails at execution, so the seed draw raises while the
+    # combo probe runs on its own thread.
+    bad = feats.withColumn(
+        "tweet_id", F.expr("cast(raise_error('bad row') as bigint)")
+    )
+    before = _cache_state(spark)
+    with pytest.raises(PySparkException, match="bad row"):
+        kmedoids(bad, k=3)
+    assert _cache_state(spark) == before

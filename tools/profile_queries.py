@@ -1,25 +1,29 @@
-"""Round-11 optimization profiler.
+"""Per-query profiler: construction vs execution time and job counts.
 
 For each headline query (or --only list) at --sf:
   * times fn() construction (eager driver work: probes, collects, loops)
     separately from the noop-sink execution of the returned frame,
   * counts the Spark jobs each phase launched (status-tracker delta),
-  * optionally dumps .explain('formatted') to plans/r11/<name>_<tag>.txt.
+  * optionally dumps .explain('formatted') to plans/<name>_<tag>.txt.
 
 Usage::
 
-    python tools/profile_r10.py [--sf DIR] [--only a,b] [--runs 2]
-        [--explain-tag before] [--all-headline]
+    python tools/profile_queries.py [--sf DIR] [--only a,b] [--runs 2]
+        [--explain-tag before]
+
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from mapreduce6240project_spark.plans import REGISTRY  # noqa: E402
 from mapreduce6240project_spark.session import get_spark  # noqa: E402
@@ -27,13 +31,14 @@ from mapreduce6240project_spark.session import get_spark  # noqa: E402
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    sf_default = os.environ.get("SPARK_GRAFT_SF_DIR")
+    ap.add_argument("--sf", default=sf_default, required=sf_default is None)
     ap.add_argument("--only", default="")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--explain-tag", default="")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="profile_r10")
+    spark = get_spark(app_name="profile")
     sc = spark.sparkContext
     spark.range(1000).write.format("noop").mode("overwrite").save()
 
@@ -42,7 +47,7 @@ def main() -> int:
     else:
         names = [s.name for s in REGISTRY.values() if s.headline]
 
-    plans_dir = Path("/root/repo/plans/r11")
+    plans_dir = ROOT / "plans"
     plans_dir.mkdir(parents=True, exist_ok=True)
 
     # warm shared session caches (feature store) outside the measured
@@ -57,7 +62,7 @@ def main() -> int:
         spec = REGISTRY[name]
         best = None
         for r in range(args.runs):
-            sc.setJobDescription(f"r11-profile:{name}")
+            sc.setJobDescription(f"profile:{name}")
             j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
             t0 = time.perf_counter()
             df = spec.fn(spark, args.sf)
