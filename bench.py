@@ -49,6 +49,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mapreduce6240project_spark.plans import REGISTRY  # noqa: E402
+from mapreduce6240project_spark.runtime import query_run  # noqa: E402
 from mapreduce6240project_spark.session import get_spark  # noqa: E402
 
 
@@ -88,10 +89,13 @@ def _timed_query(spark, spec, sf_dir) -> float:
     table builds, bounded .first() scalars), so fn() must run inside
     the timed region — timing only the final write would silently
     exclude most of such a query's real cost (review finding; the r8
-    protocol also timed fn+write)."""
-    t0 = time.perf_counter()
-    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    protocol also timed fn+write).  The query run releases what the
+    query cached after the timer stops, so no pass reads caches an
+    earlier pass left behind."""
+    with query_run():
+        t0 = time.perf_counter()
+        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
 
 def _measured_block(spark, headline, sf_dir, runs, measure_calib, label=""):

@@ -113,16 +113,18 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
         return 2
 
+    from mapreduce6240project_spark.runtime import query_run
     from mapreduce6240project_spark.session import get_spark
 
     spark = get_spark(app_name="cli")
     try:
         for name in args.names:
-            df = REGISTRY[name].fn(spark, args.sf)
-            print(f"== {name} ==")
-            if args.explain:
-                df.explain("formatted")
-            df.show(args.limit, truncate=False)
+            with query_run():
+                df = REGISTRY[name].fn(spark, args.sf)
+                print(f"== {name} ==")
+                if args.explain:
+                    df.explain("formatted")
+                df.show(args.limit, truncate=False)
     finally:
         spark.stop()
     return 0

@@ -23,157 +23,22 @@ Five strategies, all shuffle-conscious:
 
 Hash functions are Spark's xxhash64 (seeded per permutation by mixing a
 literal) -- JVM-side, codegen, no Python in the hot path.
+
+The pair generators persist intermediates that their lazily returned
+results still read; each is handed to
+:func:`mapreduce6240project_spark.runtime.track`, and the caller's
+``query_run()`` releases them once the result has been consumed.  The
+hot-bucket probe records its tier and bucket count as that run's
+decisions.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.actions import first_row
-
-# ---------------------------------------------------------------------------
-# cache lifecycle: the pair generators persist intermediate frames whose
-# lifetime is tied to a lazily returned result, so they cannot unpersist
-# before returning.  Handles are tracked here; long-lived sessions call
-# :func:`release_dedup_caches` between pipelines to drop them (round-3
-# advice: unbounded accumulation in a multi-tenant driver).
-#
-# Scoping is PER-THREAD by default (round-5 verdict item 7): a pipeline
-# wrapped in ``track_dedup_caches`` registers its frames into a
-# thread-local scope, so its exit releases exactly its own frames and a
-# concurrent pipeline on another thread is untouched.  (The previous
-# length-mark over one global list could pop a concurrent pipeline's
-# handles registered during the block.)  Frames persisted OUTSIDE any
-# scope land in the process-global list, which
-# :func:`release_dedup_caches` drains -- the compatibility path for the
-# one-pipeline-at-a-time driver.  The lock makes the global
-# bookkeeping itself thread-safe; thread-local scopes need none.
-# ---------------------------------------------------------------------------
-
-_live_caches: list[DataFrame] = []
-_caches_lock = threading.Lock()
-_scope_local = threading.local()  # .stack: list[list[DataFrame]]
-
-class _ThreadLocalStats:
-    """Mapping-like per-thread diagnostics store.  Same dict interface
-    the callers always used (``last_run_stats["hot_probe"]``), but each
-    thread sees its own underlying dict -- concurrent dedup pipelines
-    (explicitly supported via the thread-local cache scoping above) no
-    longer clobber each other's ``hot_probe``/``hot_buckets`` values
-    (round-6 advice)."""
-
-    def __init__(self, **defaults) -> None:
-        self._defaults = dict(defaults)
-        self._local = threading.local()
-
-    def _d(self) -> dict:
-        d = getattr(self._local, "d", None)
-        if d is None:
-            d = self._local.d = dict(self._defaults)
-        return d
-
-    def __getitem__(self, key):
-        return self._d()[key]
-
-    def __setitem__(self, key, value) -> None:
-        self._d()[key] = value
-
-    def __contains__(self, key) -> bool:
-        return key in self._d()
-
-    def get(self, key, default=None):
-        return self._d().get(key, default)
-
-    def __repr__(self) -> str:  # pragma: no cover - debug aid
-        return repr(self._d())
-
-
-#: diagnostics from the most recent banded-join build (per thread):
-#: ``hot_buckets`` (int) = how many (band, band_hash) buckets exceeded
-#: ``hot_bucket_threshold`` and took the salted join; ``hot_probe``
-#: (str) = which detection tier ran ("sample-clear" or "full").
-#: Observability for tests and operators; not part of the result
-#: contract.
-last_run_stats = _ThreadLocalStats(hot_buckets=0)
-
-
-def _track_persist(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist ``df``, record the handle for later release, and (by
-    default) materialize it so both consumers read the cache.  The
-    handle lands in the calling thread's innermost ``track_dedup_caches``
-    scope when one is active, else in the process-global list."""
-    df = df.persist()
-    stack = getattr(_scope_local, "stack", None)
-    if stack:
-        stack[-1].append(df)
-    else:
-        with _caches_lock:
-            _live_caches.append(df)
-    if eager:
-        df.count()
-    return df
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every frame cached by the dedup pair generators.  Call
-    after the consuming action completes (results already materialized
-    or written).  Returns the number of handles released."""
-    n = 0
-    while True:
-        with _caches_lock:
-            if not _live_caches:
-                break
-            df = _live_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-class track_dedup_caches:
-    """Context manager scoping cache release to one pipeline: on exit,
-    unpersists exactly the frames registered *inside* the block **by
-    this thread**, leaving handles owned by concurrent pipelines alone.
-    The isolation is thread-local (per-call scoping is the default
-    whenever the manager is used), so two pipelines on two threads can
-    each wrap themselves and release independently -- no global mark,
-    no cross-release.
-
-    >>> with track_dedup_caches():
-    ...     survivors = minhash_dedup(docs)
-    ...     survivors.write.parquet(...)        # consume before exit
-    """
-
-    def __enter__(self):
-        stack = getattr(_scope_local, "stack", None)
-        if stack is None:
-            stack = _scope_local.stack = []
-        self._scope: list[DataFrame] = []
-        stack.append(self._scope)
-        return self
-
-    def __exit__(self, *exc):
-        stack = _scope_local.stack
-        # pop THIS scope (it is the innermost for well-nested usage;
-        # remove-by-IDENTITY tolerates exotic interleavings -- two empty
-        # scopes compare EQUAL as lists, so ``list.remove`` could pop a
-        # different pipeline's scope and leak/mis-release its frames)
-        if stack and stack[-1] is self._scope:
-            stack.pop()
-        else:  # pragma: no cover - defensive
-            idx = next(i for i, s in enumerate(stack) if s is self._scope)
-            del stack[idx]
-        for df in self._scope:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-        return False
+from mapreduce6240project_spark.runtime import note, track
 
 # ---------------------------------------------------------------------------
 # tokenization / shingling (shared)
@@ -427,8 +292,8 @@ def minhash_candidate_pairs(
     matches exactly once: a carries one salt value, b carries all).
     When the probe (or count) finds NO hot bucket, the plain join runs
     with zero tagging overhead -- the dup-light common path pays only
-    the 1/probe_mod sample count (``last_run_stats['hot_probe']``
-    records which tier ran).
+    the 1/probe_mod sample count (the run's ``hot_probe`` decision
+    records which tier ran -- see :mod:`mapreduce6240project_spark.runtime`).
 
     ``within_star=True`` replaces the within-group all-pairs expansion
     with representative->member star edges (one row per non-rep member,
@@ -441,7 +306,7 @@ def minhash_candidate_pairs(
 
     Caches the signature frame plus the hot-bucket list every call
     (and two lazy derivations when collapsing) -- release with
-    :func:`release_dedup_caches`."""
+    :func:`mapreduce6240project_spark.runtime.query_run`."""
     rows_per_band = n_hashes // bands
 
     def _banded(sig_df, extra_cols):
@@ -528,21 +393,21 @@ def minhash_candidate_pairs(
             # always detects or always misses -- the Binomial is over
             # the id-hash ensemble, not per-run randomness.
             need_full = smax * probe_mod >= hot_bucket_threshold // 4
-        last_run_stats["hot_probe"] = "full" if need_full else "sample-clear"
+        note("hot_probe", "full" if need_full else "sample-clear")
         if not need_full:
-            last_run_stats["hot_buckets"] = 0
+            note("hot_buckets", 0)
             return self_join(banded, banded, salted=False)
         # Buckets below the threshold bound the plain join's worst task
         # at threshold^2/2 pairs.
-        hot = _track_persist(
+        hot = track(
             banded.groupBy("band", "band_hash")
             .agg(F.count(F.lit(1)).alias("_bn"))
             .filter(F.col("_bn") >= hot_bucket_threshold)
-            .select("band", "band_hash"),
-            eager=False,
+            .select("band", "band_hash")
+            .persist()
         )
         n_hot = hot.count()
-        last_run_stats["hot_buckets"] = n_hot  # diagnostic (tests/ops)
+        note("hot_buckets", n_hot)
         if n_hot == 0:
             return self_join(banded, banded, salted=False)
         tagged = banded.join(
@@ -599,7 +464,7 @@ def minhash_candidate_pairs(
         )
 
     if collapse_identical is False:
-        # eager=False: the hot-bucket probe inside _banded is the FIRST
+        # lazy persist: the hot-bucket probe inside _banded is the FIRST
         # action against the persisted signature frame, and reading a
         # cached relation materializes every scanned partition whole --
         # so the probe job doubles as the cache fill and the separate
@@ -609,9 +474,10 @@ def minhash_candidate_pairs(
         # sampled explode+hash on top of the fill the count() paid
         # anyway).  Both self-join sides then read the warm cache.
         return _naive(
-            _track_persist(
-                minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n),
-                eager=False,
+            track(
+                minhash_signatures(
+                    docs, text_col, id_col, n_hashes, shingle_n
+                ).persist()
             )
         )
 
@@ -624,25 +490,28 @@ def minhash_candidate_pairs(
     # Identical docs re-hash their shingles redundantly, but that work
     # is skewless and linear; deduplicating text first would mean
     # shuffling text.
-    allsigs = _track_persist(
-        minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n, carry_fp=True)
+    allsigs = track(
+        minhash_signatures(
+            docs, text_col, id_col, n_hashes, shingle_n, carry_fp=True
+        ).persist()
     )
+    allsigs.count()
     members = allsigs.select("_fp", id_col)
     # lazy persists: groups and rep_sigs are cheap derivations of the
     # cached signature table; the one eager materialization below
     # (rep_pairs) fills both caches for every later consumer.  Extra
     # eager counts here were each a measured full sequential pass.
-    groups = _track_persist(
-        members.groupBy("_fp").agg(
-            F.min(id_col).alias("_rid"), F.count("*").alias("_n")
-        ),
-        eager=False,
+    groups = track(
+        members.groupBy("_fp")
+        .agg(F.min(id_col).alias("_rid"), F.count("*").alias("_n"))
+        .persist()
     )
     # representative signatures: id-join reusing the aggregate's hash
     # partitioning (groups is one small row per distinct text)
-    rep_sigs = _track_persist(
-        allsigs.join(groups.select(F.col("_rid").alias(id_col), "_n"), id_col),
-        eager=False,
+    rep_sigs = track(
+        allsigs.join(
+            groups.select(F.col("_rid").alias(id_col), "_n"), id_col
+        ).persist()
     )
 
     # representative pairs, carrying each side's group size: one row per
@@ -666,7 +535,8 @@ def minhash_candidate_pairs(
     )
     # eager: pure + cross both read rep_pairs; group-pair-scale rows
     # (bounded by the deduped candidate count)
-    rep_pairs = _track_persist(rep_pairs)
+    rep_pairs = track(rep_pairs.persist())
+    rep_pairs.count()
 
     # singleton-singleton pairs (the overwhelming majority on a
     # dup-light corpus) need no expansion: member id == rep id, and the
@@ -818,12 +688,12 @@ def jaccard_verified_pairs(
     # pairs persists LAZILY (r10 optimization): ids.count() below is the
     # first action over the chain and scans pairs in full, so the former
     # separate eager pairs.count() was a redundant sequential job.
-    pairs = _track_persist(candidates.select("id_a", "id_b"), eager=False)
-    ids = _track_persist(
+    pairs = track(candidates.select("id_a", "id_b").persist())
+    ids = track(
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct(),
-        eager=False,
+        .distinct()
+        .persist()
     )
     # The count stays an explicit job BEFORE the semi-join below is
     # planned: a materialized InMemoryRelation carries accurate size
@@ -840,9 +710,8 @@ def jaccard_verified_pairs(
     # -- and the >max_docs branch is exactly the dup-heavy regime where
     # that second pass is most expensive (round-5 advice).  The byte
     # probe in the <=max_docs branch reads the same cache.
-    semi = _track_persist(
-        docs.join(ids, id_col, "left_semi").select(id_col, text_col),
-        eager=False,
+    semi = track(
+        docs.join(ids, id_col, "left_semi").select(id_col, text_col).persist()
     )
     hint = lambda d: d  # noqa: E731 - shuffle-join default
     if n_candidate_docs <= broadcast_max_docs:
@@ -861,12 +730,11 @@ def jaccard_verified_pairs(
     # tokenize + shingle every candidate doc twice (once per side's
     # broadcast/shuffle build).  O(|candidates|) rows either way; the
     # lazy persist fills on the first side's build (r10 optimization).
-    sh = _track_persist(
+    sh = track(
         semi.selectExpr(
             _q(id_col),
             f"array_distinct({shingles_sql(text_col, shingle_n)}) AS sh",
-        ),
-        eager=False,
+        ).persist()
     )
     a = hint(sh.selectExpr(f"{_q(id_col)} AS id_a", "sh AS sh_a"))
     b = hint(sh.selectExpr(f"{_q(id_col)} AS id_b", "sh AS sh_b"))
@@ -1105,7 +973,8 @@ def winnow_overlap_pairs(
     explode fingerprint sets, equi-join on the hash, score by overlap
     coefficient |A∩B| / min(|A|,|B|)."""
     id_col = kw.get("id_col", "doc_id")
-    fps = _track_persist(winnow_fingerprints(docs, **kw))
+    fps = track(winnow_fingerprints(docs, **kw).persist())
+    fps.count()
     ex = fps.select(
         F.col(id_col), F.col("n_fingerprints"), F.explode("fingerprints").alias("fp")
     )
@@ -1224,7 +1093,7 @@ def jaccard_prefix_pairs(
             F.array_distinct(shingles(text_col, shingle_n))
         ).alias("t"),
     )
-    tok = _track_persist(tok, eager=False)
+    tok = track(tok.persist())
     freq = tok.groupBy("t").agg(F.count("*").alias("gf"))
     w = Window.partitionBy(id_col).orderBy("gf", "t")
     ranked = (
@@ -1375,7 +1244,7 @@ def containment_prefix_pairs(
         F.col(id_col),
         F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("t"),
     )
-    tok = _track_persist(tok, eager=False)
+    tok = track(tok.persist())
     freq = tok.groupBy("t").agg(F.count("*").alias("gf"))
     w = Window.partitionBy(id_col).orderBy("gf", "t")
     ranked = (

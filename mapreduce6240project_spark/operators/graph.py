@@ -354,10 +354,16 @@ def global_clustering(
     try:
         tri = int(first_row(triangle_count(pairs, src, dst))["n_triangles"])
         wed = wed_future.result()
+    except BaseException:
+        # Wait for the wedge job first: still running, it would refill
+        # the edge cache after the unpersist.  The error re-raised is
+        # this thread's; a wedge error is dropped.
+        wed_future.exception()
+        raise
     finally:
         pool.shutdown(wait=False)
-    if not was_cached:
-        pairs.unpersist(blocking=False)
+        if not was_cached:
+            pairs.unpersist(blocking=False)
     wed = int(wed or 0)
     gcc = int(math.floor(3.0 * tri / wed * 1000000 + 0.5)) if wed > 0 else None
     return pairs.sparkSession.createDataFrame(

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.operators.dedup import normalize_text
+from mapreduce6240project_spark.runtime import track
 
 # Minimal per-language stopword markers (public common words).  The
 # heuristic counts marker hits per language and picks the argmax --
@@ -274,7 +275,7 @@ def pack_chunks(
 
     from mapreduce6240project_spark.operators.fanout import fan_out
 
-    d = (
+    d = track(
         fan_out(docs)
         .repartitionByRange(id_col)
         # null text packs as 0 tokens (keeps the prefix sum total)

@@ -458,7 +458,7 @@ FROM a, b, i""",
 )
 def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce6240project_spark.operators import dedup as D
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
     docs = load_table(spark, sf_dir, "documents")
     # each pair set feeds its own count AND the intersection join;
@@ -466,15 +466,15 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two most expensive dedup plans) each ran TWICE (r11, guide
     # section 5).  Pair-grain rows -- bounded by the duplicate density,
     # tiny next to the corpus at any scale.
-    sh = cache_tracked(
+    sh = track(
         D.simhash_pairs(docs, max_hamming=3, token_hash="md5").select(
             "id_a", "id_b"
-        )
+        ).persist()
     )
-    mh = cache_tracked(
+    mh = track(
         D.jaccard_verified_pairs(
             docs, D.minhash_candidate_pairs(docs), threshold=0.5
-        ).select("id_a", "id_b")
+        ).select("id_a", "id_b").persist()
     )
     a = sh.agg(F.count(F.lit(1)).alias("n_simhash"))
     b = mh.agg(F.count(F.lit(1)).alias("n_minhash"))
@@ -1534,7 +1534,7 @@ def q_bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # audit, warm exec 5.9 s at sf0.01).  Doc-grain, 32 small ints per
     # row -- the 32x-compressed sketch table is small by design at any
     # scale (r11; guide section 5).
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
     # the 32 one-bit slots are PACKED into a single bigint in the same
     # aggregate (bit i-1 = the i-th permutation's low bit), so (a) the
@@ -1551,8 +1551,8 @@ def q_bbit_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" AS BIGINT) * {1 << (i - 1)}"
         for i in range(1, _BBIT_PERMS + 1)
     )
-    sig = cache_tracked(
-        hm.groupBy("doc_id").agg(F.expr(bits_sql).alias("bits"))
+    sig = track(
+        hm.groupBy("doc_id").agg(F.expr(bits_sql).alias("bits")).persist()
     )
     pairs = ngram_jaccard_pairs(docs, threshold=0.5).selectExpr(
         "id_a",

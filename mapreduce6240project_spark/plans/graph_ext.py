@@ -283,13 +283,12 @@ def q_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the capped edge table feeds THREE consumers (deg, both hop sides)
     # and cp a fourth -- unpersisted, each re-derives the lineitem
     # self-join + support aggregate (r7 profile: 26 exchanges, 14
-    # scans).  cache_tracked pins both; release_prefix_caches (wired
-    # into plan_lint / driver_mirror / test fixtures) is the safe
-    # unpersist point the old no-persist note said was missing.
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    # scans).  Both are pinned and tracked; the caller's query run is
+    # the safe unpersist point the old no-persist note said was missing.
+    from mapreduce6240project_spark.runtime import track
 
     edges, cp = _copurchase_edges_with_pairs(spark, sf_dir)
-    edges, cp = cache_tracked(edges), cache_tracked(cp)
+    edges, cp = track(edges.persist()), track(cp.persist())
     deg = edges.groupBy("u").agg(F.count("*").alias("d"))
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("z"))
     e2 = edges.select(F.col("u").alias("z2"), F.col("v").alias("b"))
@@ -345,17 +344,17 @@ def q_random_walks_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nb is filtered once per walk step -- cached so the three steps
     # share one copurchase-graph build instead of re-deriving the
     # lineitem self-join each (r7 profile: 23 exchanges, 12 scans)
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
     edges = _copurchase_edges(spark, sf_dir)
     w = Window.partitionBy("u").orderBy("v")
-    nb = cache_tracked(
+    nb = track(
         edges.select(
             "u",
             "v",
             F.row_number().over(w).alias("rk"),
             F.count("*").over(Window.partitionBy("u")).alias("deg"),
-        )
+        ).persist()
     )
 
     def pick(step: int) -> F.Column:
@@ -506,20 +505,20 @@ FROM und e JOIN deg du ON du.u = e.u JOIN deg dv ON dv.u = e.v""",
 )
 def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce6240project_spark.operators.graph import simgraph_pairs
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
     pairs = simgraph_pairs(spark, sf_dir)
     # und feeds deg AND the edge join, deg feeds both endpoint lookups:
     # pin both so a cold plan builds the simgraph subtree once instead
     # of three times (r8 PLANPROFILE's worst row, 47 cold exchanges)
-    und = cache_tracked(
+    und = track(
         pairs.select(
             F.col("id_a").alias("u"), F.col("id_b").alias("v")
         ).unionByName(
             pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-        )
+        ).persist()
     )
-    deg = cache_tracked(und.groupBy("u").agg(F.count(F.lit(1)).alias("d")))
+    deg = track(und.groupBy("u").agg(F.count(F.lit(1)).alias("d")).persist())
     du = deg.select(F.col("u").alias("eu"), F.col("d").alias("du"))
     dv = deg.select(F.col("u").alias("ev"), F.col("d").alias("dv"))
     e = und.join(du, und.u == du.eu).join(dv, und.v == dv.ev)
@@ -598,12 +597,13 @@ def q_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r7 PLANPROFILE: 43 exchanges, ~6 fact-table scans).  One cached
     # edge table is the iterative-state discipline the clustering and
     # co-purchase families already follow.
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
-    edges = cache_tracked(
+    edges = track(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
+        .persist()
     )
 
     def _norm(df: DataFrame, col: str, out: str) -> DataFrame:
@@ -615,7 +615,7 @@ def q_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row aggregates, dimension-sized at any sf) makes both
         # references read one cached build, the same discipline as
         # rm3's term table and the clustering combo cache.
-        df = cache_tracked(df)
+        df = track(df.persist())
         mx = df.agg(F.max(col).alias("_mx"))
         return df.crossJoin(F.broadcast(mx)).select(
             *[x for x in df.columns if x != col],
@@ -858,13 +858,13 @@ UNION ALL {_wl_summary_sql('c2', 2)}""",
     "per-round partition summary; iterative state cached per round",
 )
 def q_wl_refinement_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
-    edges = cache_tracked(_copurchase_edges(spark, sf_dir))
-    colors = cache_tracked(
+    edges = track(_copurchase_edges(spark, sf_dir).persist())
+    colors = track(
         edges.groupBy(F.col("u").alias("v")).agg(
             F.count(F.lit(1)).cast("bigint").alias("c")
-        )
+        ).persist()
     )
     rounds = [colors]
     for _ in range(2):
@@ -884,7 +884,7 @@ def q_wl_refinement_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         own = prev.select(F.col("v").alias("ov"), F.col("c").alias("oc"))
-        nxt = cache_tracked(
+        nxt = track(
             agg.join(own, agg.u == own.ov).select(
                 F.col("u").alias("v"),
                 hash60(
@@ -892,7 +892,7 @@ def q_wl_refinement_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("oc").cast("string"), F.lit("|"), F.col("sig")
                     )
                 ).alias("c"),
-            )
+            ).persist()
         )
         rounds.append(nxt)
 

@@ -751,9 +751,9 @@ def q_elbow_knee_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and (through scored/interior) the knee pick: pin it so a cold
     # plan runs the per-k feature-store sweep once, not per consumer
     # (24 cold exchanges in the r8 PLANPROFILE)
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.runtime import track
 
-    costs = cache_tracked(costs)
+    costs = track(costs.persist())
     ends = costs.agg(
         F.min("k").alias("k1"),
         F.max("k").alias("kn"),

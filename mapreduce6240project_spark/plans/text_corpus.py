@@ -983,19 +983,17 @@ FROM d2"""
 def q_graph_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce6240project_spark.operators.graph import bfs_hops, simgraph_pairs
 
-    pairs = simgraph_pairs(spark, sf_dir).persist()
+    pairs = simgraph_pairs(spark, sf_dir)
     d1 = bfs_hops(pairs, source=_SWEEP_SOURCE, max_hops=_SWEEP_HOPS)
     far = (
         d1.orderBy(F.desc("hops"), "node").limit(1).collect()[0].node
     )  # 1-row driver scalar
     d2 = bfs_hops(pairs, source=far, max_hops=_SWEEP_HOPS)
-    out = d2.agg(
+    return d2.agg(
         F.lit(far).cast("bigint").alias("far_node"),
         F.max("hops").cast("bigint").alias("diameter_est"),
         F.count(F.lit(1)).alias("n_reached"),
     )
-    pairs.unpersist()
-    return out
 
 
 # =========================================================================

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from mapreduce6240project_spark.plans.registry import _register
+from mapreduce6240project_spark.runtime import track
 from mapreduce6240project_spark.sources.tables import load_table
 from pyspark.sql import DataFrame, SparkSession, Window
 from typing import Iterator
@@ -710,7 +711,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filtered fact projection -- the global total is then the sum of
     # the per-part sums (identical bigints, associativity), so one fact
     # scan feeds both and the cache footprint is dimension-sized
-    per_part = (
+    per_part = track(
         filtered.groupBy("l_partkey")
         .agg(F.sum("cents").alias("value_cents"))
         .persist()
@@ -780,7 +781,7 @@ WHERE r.total_cents = (SELECT max(total_cents) FROM rev)""",
 def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev = (
+    rev = track(
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -2142,7 +2143,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # version; the 100 TB fallback note in the wave-74 header is now
     # moot because the exact form scales).
     from mapreduce6240project_spark.operators.prefix import (
-        cache_tracked,
         distributed_prefix,
         ntile_from_rank,
     )
@@ -2161,10 +2161,11 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr(_CENTS)).alias("monetary_c"),
     )
     mx = base.agg(F.max("last_d").alias("_mx"))
-    per_cust = cache_tracked(
+    per_cust = track(
         base.crossJoin(F.broadcast(mx))
         .withColumn("recency_d", F.datediff(F.col("_mx"), F.col("last_d")))
         .drop("_mx")
+        .persist()
     )
 
     def quintile(order_col: str, out: str) -> DataFrame:
@@ -3298,13 +3299,8 @@ def q_bradley_terry_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration's lineage with an eager localCheckpoint: the plan is now
     # linear in iterations (3 tiny joins over a ~25-row checkpoint), and
     # exchange reuse is no longer load-bearing for correctness.
-    from mapreduce6240project_spark.operators.prefix import (
-        cache_tracked,
-        checkpoint_tracked,
-    )
-
-    games = cache_tracked(games)
-    wins = cache_tracked(wl.groupBy("a").agg(F.sum("w").alias("w")))
+    games = track(games.persist())
+    wins = track(wl.groupBy("a").agg(F.sum("w").alias("w")).persist())
     s = wins.select("a", F.lit(1000000).cast("bigint").alias("s"))
     for _ in range(_BT_ITERS):
         sa = s.select(F.col("a").alias("ja"), F.col("s").alias("s_a"))
@@ -3344,7 +3340,7 @@ def q_bradley_terry_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("s"),
         )
-        s = checkpoint_tracked(s)
+        s = track(s.localCheckpoint())
     return wins.join(s, "a").select(
         F.col("a").alias("p_brand"),
         F.col("w").alias("wins"),

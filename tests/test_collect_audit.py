@@ -101,9 +101,11 @@ INVENTORY: dict[str, tuple[int, str]] = {
         "would change the shared expression shape all callers pin)",
     ),
     "operators/dedup.py": (
-        3,
-        "3 .count() sites: eager cache materialization (deliberate, "
-        "scan happens once into the cache), hot-bucket count n_hot (on "
+        5,
+        "5 .count() sites: 3 eager cache materializations (allsigs, "
+        "rep_pairs, winnow fps -- deliberate, the scan happens once "
+        "into the cache; each sits at its call site, next to the "
+        "persist it fills), hot-bucket count n_hot (on "
         "the already-cached banded frame), candidate-id cache "
         "materialization.  The former 3 .first() probe sites (pre-probe "
         "max group, byte probe, hot-bucket sample max -- 1-row aggs "

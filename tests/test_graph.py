@@ -3,10 +3,13 @@ greedy pair-dropping over-keeps."""
 
 from __future__ import annotations
 
+import pytest
+
 from mapreduce6240project_spark.operators.graph import (
     connected_components,
     dedup_by_components,
 )
+from tests.conftest import SF_SMALL, cache_snapshot, leaked_cache_entries
 
 
 def _cc(spark, edges):
@@ -102,6 +105,57 @@ def test_global_clustering_no_wedges_is_null(spark):
     assert r.n_triangles == 0 and r.n_wedges == 0 and r.gcc_micros is None
 
 
+def test_global_clustering_error_waits_for_wedges_and_releases(
+    spark, monkeypatch
+):
+    # the triangle count fails while the wedge job runs on its own
+    # thread: the call must not return with that job still running or
+    # its own persist of the edge set left behind
+    from mapreduce6240project_spark.operators import graph
+
+    def fail(*_a, **_k):
+        raise RuntimeError("triangle count failed")
+
+    wedges_done = []
+
+    def first_row(df):  # only the wedge job calls it once triangles fail
+        row = real_first_row(df)
+        wedges_done.append(row)
+        return row
+
+    real_first_row = graph.first_row
+    monkeypatch.setattr(graph, "triangle_count", fail)
+    monkeypatch.setattr(graph, "first_row", first_row)
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3)], "id_a long, id_b long"
+    )
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = cache_snapshot(spark), set(tracker.getActiveJobsIds())
+    with pytest.raises(RuntimeError, match="triangle count failed"):
+        graph.global_clustering(pairs)
+    assert wedges_done, "returned while the wedge job was still running"
+    bus.waitUntilEmpty()  # job-end events reach the status store
+    assert leaked_cache_entries(spark, before[0]) == 0
+    assert set(tracker.getActiveJobsIds()) == before[1]
+    assert not pairs.is_cached
+
+
+def test_graph_diameter_sweep_keeps_shared_simgraph(spark):
+    # the simgraph edge set is session-scoped: a consumer that
+    # unpersists it makes every later graph query recompute the n-gram
+    # Jaccard join
+    from mapreduce6240project_spark.operators.graph import simgraph_pairs
+    from mapreduce6240project_spark.plans import REGISTRY
+    from mapreduce6240project_spark.runtime import query_run
+
+    shared = simgraph_pairs(spark, SF_SMALL)
+    with query_run():
+        REGISTRY["graph_diameter_sweep"].fn(spark, SF_SMALL).collect()
+    assert shared.is_cached and shared.storageLevel.useMemory
+
+
 def test_bfs_hops_chain_and_unreachable(spark):
     from mapreduce6240project_spark.operators.graph import bfs_hops
 
@@ -177,8 +231,6 @@ def test_label_propagation_truncation_warns(spark):
 def test_label_propagation_strict_raises(spark):
     # strict=True turns the truncation warning into a hard error so
     # automated pipelines fail loudly (round-4 advice)
-    import pytest
-
     from mapreduce6240project_spark.operators.graph import connected_components
 
     pairs = spark.createDataFrame(

@@ -66,13 +66,9 @@ def _normalize(df):
 
 
 def _clear_all_caches(spark):
-    from mapreduce6240project_spark.operators.dedup import release_dedup_caches
-    from mapreduce6240project_spark.operators.prefix import release_prefix_caches
     from mapreduce6240project_spark.sources.tweets import release_feature_store
 
     spark.catalog.clearCache()
-    release_dedup_caches()
-    release_prefix_caches()
     release_feature_store(spark)
 
 
@@ -85,14 +81,18 @@ def registry():
 
 @pytest.mark.parametrize("name", SAMPLE)
 def test_layout_invariant(spark, registry, name):
+    from mapreduce6240project_spark.runtime import query_run
+
     saved = {k: spark.conf.get(k) for k in LAYOUT_B}
     try:
         _clear_all_caches(spark)
-        base = _normalize(registry[name](spark, SF_SMALL))
+        with query_run():
+            base = _normalize(registry[name](spark, SF_SMALL))
         _clear_all_caches(spark)
         for k, v in LAYOUT_B.items():
             spark.conf.set(k, v)
-        hostile = _normalize(registry[name](spark, SF_SMALL))
+        with query_run():
+            hostile = _normalize(registry[name](spark, SF_SMALL))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

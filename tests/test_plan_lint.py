@@ -110,8 +110,8 @@ def test_distributed_prefix_matches_naive_windows(spark):
     from mapreduce6240project_spark.operators.prefix import (
         distributed_prefix,
         ntile_from_rank,
-        release_prefix_caches,
     )
+    from mapreduce6240project_spark.runtime import query_run
 
     random.seed(7)
     for n, k in [(1, 5), (3, 5), (53, 4), (101, 10)]:
@@ -120,41 +120,39 @@ def test_distributed_prefix_matches_naive_windows(spark):
             for i in range(n)
         ]
         df = spark.createDataFrame(rows, "id long, key long, val long")
-        got = distributed_prefix(
-            df, ["key", "id"], value_col="val", total_col="_n"
-        ).select(
-            "id",
-            "_rank",
-            "_cum",
-            ntile_from_rank("_rank", "_n", k).alias("_tile"),
-        )
-        w = Window.orderBy("key", "id")
-        exp = df.select(
-            "id",
-            F.row_number().over(w).alias("r"),
-            F.sum("val").over(w).alias("c"),
-            F.ntile(k).over(w).alias("t"),
-        )
-        j = got.join(exp, "id")
-        bad = j.filter(
-            (F.col("_rank") != F.col("r"))
-            | (F.col("_cum") != F.col("c"))
-            | (F.col("_tile") != F.col("t"))
-        ).count()
+        with query_run():
+            got = distributed_prefix(
+                df, ["key", "id"], value_col="val", total_col="_n"
+            ).select(
+                "id",
+                "_rank",
+                "_cum",
+                ntile_from_rank("_rank", "_n", k).alias("_tile"),
+            )
+            w = Window.orderBy("key", "id")
+            exp = df.select(
+                "id",
+                F.row_number().over(w).alias("r"),
+                F.sum("val").over(w).alias("c"),
+                F.ntile(k).over(w).alias("t"),
+            )
+            j = got.join(exp, "id")
+            bad = j.filter(
+                (F.col("_rank") != F.col("r"))
+                | (F.col("_cum") != F.col("c"))
+                | (F.col("_tile") != F.col("t"))
+            ).count()
         assert bad == 0, f"n={n} k={k}: {bad} mismatches"
-        release_prefix_caches()
 
 
 def test_distributed_prefix_has_no_global_window(spark):
     """The helper's own plan must pass its consumers' lint: no
     unpartitioned window, ranks from partition-local windows only."""
-    from mapreduce6240project_spark.operators.prefix import (
-        distributed_prefix,
-        release_prefix_caches,
-    )
+    from mapreduce6240project_spark.operators.prefix import distributed_prefix
+    from mapreduce6240project_spark.runtime import query_run
 
     df = spark.range(1000).selectExpr("id", "id % 97 AS key")
-    out = distributed_prefix(df, ["key", "id"])
-    errors, _ = lint_plan(physical_plan_json(out))
+    with query_run():
+        out = distributed_prefix(df, ["key", "id"])
+        errors, _ = lint_plan(physical_plan_json(out))
     assert "global_window_unbounded" not in errors
-    release_prefix_caches()

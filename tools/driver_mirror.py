@@ -48,6 +48,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from mapreduce6240project_spark.runtime import query_run
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -77,7 +78,10 @@ def main() -> int:
     for i, name in enumerate(names, 1):
         t0 = time.monotonic()
         try:
-            got = qs[name](spark, args.sf).toPandas()
+            # the run releases what the query cached once it is consumed,
+            # so a 465-query session does not accumulate them
+            with query_run():
+                got = qs[name](spark, args.sf).toPandas()
             if name not in oracles:
                 n_rows_only += 1
                 status = f"rows_only ({len(got)} rows)"
@@ -106,18 +110,6 @@ def main() -> int:
             f"[{i:3d}/{len(names)}] {name:34s} {time.monotonic() - t0:6.1f}s  {status}",
             flush=True,
         )
-        # per-query cache hygiene: operators that persist internal
-        # frames (dedup signatures, prefix range exchanges) must not
-        # accumulate across a 395-query session
-        from mapreduce6240project_spark.operators.dedup import (
-            release_dedup_caches,
-        )
-        from mapreduce6240project_spark.operators.prefix import (
-            release_prefix_caches,
-        )
-
-        release_dedup_caches()
-        release_prefix_caches()
 
     print(
         f"\nSUMMARY pass={n_pass} rows_only={n_rows_only} fail={n_fail} err={n_err}"

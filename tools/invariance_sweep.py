@@ -69,12 +69,8 @@ def _normalize(df):
 
 def _clear_all_caches(spark) -> None:
     spark.catalog.clearCache()
-    from mapreduce6240project_spark.operators.dedup import release_dedup_caches
-    from mapreduce6240project_spark.operators.prefix import release_prefix_caches
     from mapreduce6240project_spark.sources.tweets import release_feature_store
 
-    release_dedup_caches()
-    release_prefix_caches()
     release_feature_store(spark)
 
 
@@ -86,6 +82,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
+    from mapreduce6240project_spark.runtime import query_run
     from mapreduce6240project_spark.session import get_spark
 
     spark = get_spark()
@@ -109,7 +106,8 @@ def main() -> int:
                     spark.conf.set(k, v)
                 # rebuild the plan under the new confs -- conf reads
                 # happen at planning time
-                results.append(_normalize(qs[name](spark, args.sf)))
+                with query_run():
+                    results.append(_normalize(qs[name](spark, args.sf)))
             a, b = results
             if a.shape == b.shape and bool(a.equals(b)):
                 n_pass += 1

@@ -442,7 +442,9 @@ def main() -> int:
     args = ap.parse_args()
 
     from mapreduce6240project_spark.plans import REGISTRY
+    from mapreduce6240project_spark.runtime import query_run
     from mapreduce6240project_spark.session import get_spark
+    from mapreduce6240project_spark.sources.tweets import release_feature_store
 
     names = list(REGISTRY)
     if args.only:
@@ -459,8 +461,8 @@ def main() -> int:
     for i, name in enumerate(names, 1):
         t0 = time.time()
         try:
-            df = REGISTRY[name].fn(spark, args.sf)
-            plan_json = physical_plan_json(df)
+            with query_run():
+                plan_json = physical_plan_json(REGISTRY[name].fn(spark, args.sf))
             findings, infos = lint_plan_detailed(plan_json)
             if args.profile:
                 profiles[name] = profile_plan(plan_json)
@@ -495,23 +497,11 @@ def main() -> int:
                 f"[{i:3d}/{len(names)}] {name:40s} {dt:5.1f}s pass"
                 f"{extra}{note}"
             )
-        # release anything a builder cached (adaptive ops persist);
-        # also empty the dedup/prefix trackers and the feature-store
-        # singleton so each query is captured against cold cache state
-        # (a warm feature store swaps InMemoryTableScan for the file
-        # scan and hides the real plan shape)
-        from mapreduce6240project_spark.operators.dedup import (
-            release_dedup_caches,
-        )
-        from mapreduce6240project_spark.operators.prefix import (
-            release_prefix_caches,
-        )
-        from mapreduce6240project_spark.sources.tweets import (
-            release_feature_store,
-        )
-
-        release_dedup_caches()
-        release_prefix_caches()
+        # the query run released what the builder tracked; also drop
+        # the feature-store singleton and any other cache so each query
+        # is captured against cold cache state (a warm feature store
+        # swaps InMemoryTableScan for the file scan and hides the real
+        # plan shape)
         release_feature_store(spark)
         spark.catalog.clearCache()
 

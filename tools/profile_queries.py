@@ -26,6 +26,7 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 from mapreduce6240project_spark.plans import REGISTRY  # noqa: E402
+from mapreduce6240project_spark.runtime import query_run  # noqa: E402
 from mapreduce6240project_spark.session import get_spark  # noqa: E402
 
 
@@ -64,27 +65,28 @@ def main() -> int:
         for r in range(args.runs):
             sc.setJobDescription(f"profile:{name}")
             j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
-            df = spec.fn(spark, args.sf)
-            t1 = time.perf_counter()
-            j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            j2 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            with query_run():
+                t0 = time.perf_counter()
+                df = spec.fn(spark, args.sf)
+                t1 = time.perf_counter()
+                j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+                j2 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+                if r == 0 and args.explain_tag:
+                    import contextlib
+                    import io
+
+                    buf = io.StringIO()
+                    with contextlib.redirect_stdout(buf):
+                        df.explain("formatted")
+                    (plans_dir / f"{name}_{args.explain_tag}.txt").write_text(
+                        buf.getvalue()
+                    )
             sc.setJobDescription(None)
             rec = (t1 - t0, t2 - t1, t2 - t0, j1 - j0, j2 - j1)
             if best is None or rec[2] < best[2]:
                 best = rec
-            if r == 0 and args.explain_tag:
-                import contextlib
-                import io
-
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
-                (plans_dir / f"{name}_{args.explain_tag}.txt").write_text(
-                    buf.getvalue()
-                )
         print(f"{name:28s} {best[0]:7.3f} {best[1]:7.3f} {best[2]:7.3f} "
               f"{best[3]:7d} {best[4]:7d}", flush=True)
     spark.stop()
