@@ -35,10 +35,11 @@ def adaptive_threshold(explicit: int | None, default: int) -> int:
 
 
 def scratch_dir(prefix: str) -> str:
-    """``tempfile.mkdtemp`` with end-of-process cleanup: registry
-    queries that materialize side tables (the txlog round-trips) get a
-    scratch root that an ``atexit`` hook removes, so repeated
-    driver_mirror / plan_lint / pytest sessions don't accumulate
+    """``tempfile.mkdtemp`` with end-of-process cleanup, and the
+    package's only scratch-directory source: registry queries that
+    materialize side tables (txlog round-trips, format round-trips,
+    streaming sinks) get a root that an ``atexit`` hook removes, so
+    repeated driver_mirror / plan_lint / pytest sessions don't accumulate
     unbounded full-table copies in /tmp (review finding).  Lazy frames
     returned by those queries stay readable for the whole process
     lifetime -- cleanup only runs at interpreter exit."""

@@ -22,10 +22,9 @@ Spark-first design (SURVEY.md sections 3.2 / 4):
   pairwise-distance argmin (the reference's nested reducer iteration is
   broken, section 2.9.2) as a self equi-join on ``cluster`` +
   ``min(struct(total_dist, tweet_id))`` for a deterministic argmin.
-  This is the only shuffle in the loop.  It is O(sum n_c^2); at scale
-  pass ``update_cap`` to bound the per-cluster pairwise set with a
-  deterministic hash-sample -- the classic CLARA-style medoid
-  approximation -- turning the update into O(sum min(n_c, cap)^2).
+  This is the only shuffle in the loop.  Exact combo compression makes
+  it O(C^2) in the distinct feature combinations C, not O(sum n_c^2)
+  (see ``update_medoids``).
 * **Convergence** (C2): driver-side displacement check against
   ``tol`` (reference ``limit = 1.5``, Cluster.java:26,355-382), plus
   early stop when assignments are stable (medoids unchanged).
@@ -40,7 +39,7 @@ import math
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.distance import (
@@ -90,11 +89,7 @@ def assign_clusters(
     )
 
 
-def update_medoids(
-    assigned: DataFrame,
-    weighted: bool = True,
-    update_cap: int | None = None,
-) -> DataFrame:
+def update_medoids(assigned: DataFrame, weighted: bool = True) -> DataFrame:
     """J3 + A5: per-cluster pairwise-distance argmin (intended semantics
     of Cluster.java:229-265).  Returns one row per cluster:
     ``(cluster, tweet_id)`` -- the new medoid.
@@ -112,21 +107,10 @@ def update_medoids(
     tweet_id) tie-break.  The naive version needs ~(n/k)^2 distance
     evaluations per cluster; at 100 TB that is the job that never
     finishes, while this is one partial-aggregated groupBy.
-
-    ``update_cap``: optional CLARA-style deterministic member sample for
-    feature spaces where combos would not compress (kept for generality;
-    makes the update approximate).
     """
     weighted_input = "n" in assigned.columns  # already combo-compressed
     cols = ["cluster", *FEATURE_COLS] + (["n"] if weighted_input else [])
     members = assigned.select(*cols)
-    if update_cap is not None:
-        w = Window.partitionBy("cluster").orderBy(F.xxhash64("tweet_id"), "tweet_id")
-        members = (
-            members.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= update_cap)
-            .drop("_rn")
-        )
     weight = F.sum("n") if weighted_input else F.count("*")
     combos = members.groupBy("cluster", *DISTANCE_FEATURES).agg(
         weight.alias("n"), F.min("tweet_id").alias("tweet_id")
@@ -227,8 +211,14 @@ def _iterate_driver_side(
     return medoids
 
 
-#: combo-table size below which the iteration loop runs driver-side
-DRIVER_COMBO_THRESHOLD = 100_000
+#: combo-table size below which the iteration loop runs driver-side.
+#: The driver loop is O(C^2 / k) Python per iteration, the distributed
+#: one a near-flat few Spark jobs.  Whole kmedoids + cluster_cost, k=3,
+#: tol=0, synthetic combos, 4 cores, best of 3 (s, driver / distributed):
+#: C=120 1.2 / 5.2, C=1,000 2.8 / 6.3, C=1,500 8.6 / 7.6,
+#: C=2,000 13.1 / 6.1, C=3,000 31.0 / 9.1 -- the crossover sits near
+#: 1,200.  The test and benchmark data (C <= 120) stay driver-side.
+DRIVER_COMBO_THRESHOLD = 1_200
 
 
 def kmedoids(
@@ -238,7 +228,6 @@ def kmedoids(
     max_iter: int = 10,
     tol: float = 1.5,
     weighted: bool = True,
-    update_cap: int | None = None,
     driver_combo_threshold: int | None = None,
 ) -> KMedoidsResult:
     """Lloyd-style k-medoids (C1/C2, Cluster.java:310-386 intended
@@ -302,7 +291,7 @@ def kmedoids(
 
     head_future = None
     pool = None
-    if update_cap is None and seeds is None:
+    if seeds is None:
         # The probe and the seed draw are independent jobs over the same
         # cached projection; submitting the probe from a driver thread
         # overlaps its shuffle with the seed TakeOrdered instead of
@@ -362,14 +351,8 @@ def kmedoids(
 
         result = KMedoidsResult(assignments=features, medoids=medoids)
 
-        if head_future is not None:
-            head = head_future.result()
-        elif update_cap is None:
-            head = _probe()
-        else:
-            head = None
-
-        if head is not None and len(head) <= driver_combo_threshold:
+        head = head_future.result() if head_future is not None else _probe()
+        if len(head) <= driver_combo_threshold:
             combo_rows = [r.asDict() for r in head]
             combos.unpersist()
             medoids = _iterate_driver_side(
@@ -393,7 +376,7 @@ def kmedoids(
         assigned = assign_clusters(combos, medoids, weighted)
         for it in range(1, max_iter + 1):
             result.iterations = it
-            new_ids_rows = update_medoids(assigned, weighted, update_cap).collect()
+            new_ids_rows = update_medoids(assigned, weighted).collect()
             new_ids = [r.tweet_id for r in sorted(new_ids_rows, key=lambda r: r.cluster)]
             # clusters can be empty (id missing) -- keep the old medoid then
             old_by_idx = {i: m for i, m in enumerate(medoids)}

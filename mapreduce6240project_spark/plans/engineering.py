@@ -21,7 +21,6 @@ snapshot test and the full sf0.01 mirror).
 
 from __future__ import annotations
 
-import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from mapreduce6240project_spark.functions.actions import first_row
@@ -79,7 +78,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join two tables bucketed on the join key: the sort-merge join
     reads bucket i of each side in task i -- no Exchange anywhere in
     the plan (asserted in tests/test_plans.py)."""
-    base = tempfile.mkdtemp(prefix="sparkgraft_bucketed_")
+    base = scratch_dir("sparkgraft_bucketed_")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -111,7 +110,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lay events out partitioned by event_type, then aggregate one
     type: the predicate becomes a PartitionFilter -- non-click
     directories are never listed, let alone read."""
-    out = tempfile.mkdtemp(prefix="sparkgraft_parts_")
+    out = scratch_dir("sparkgraft_parts_")
     write_partitioned(load_table(spark, sf_dir, "events"), out, "event_type")
     clicks = read_partition(spark, out, "event_type", "click")
     micros = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("bigint")
@@ -134,7 +133,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write orders as ORC, read it back, aggregate: exercises the
     second native columnar format end-to-end (schema preservation,
     predicate pushdown support comes free from the ORC reader)."""
-    out = tempfile.mkdtemp(prefix="sparkgraft_orc_")
+    out = scratch_dir("sparkgraft_orc_")
     load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
@@ -1738,7 +1737,7 @@ FROM documents""",
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="sparkgraft_evo_")
+    out = scratch_dir("sparkgraft_evo_")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source").write.mode(
         "overwrite"
     ).parquet(f"{out}/gen=v1")
@@ -1817,7 +1816,7 @@ def q_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM-dd"),
     )
-    out = tempfile.mkdtemp(prefix="sparkgraft_fw_")
+    out = scratch_dir("sparkgraft_fw_")
     o.select(line.alias("value")).write.mode("overwrite").text(out)
     back = spark.read.text(out).select(
         F.substring("value", 1, 12).cast("bigint").alias("o_orderkey"),
@@ -1963,7 +1962,7 @@ def q_dynamic_partition_overwrite(
         F.col("ts").cast("date").cast("string").alias("day"),
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("v_c"),
     )
-    path = tempfile.mkdtemp(prefix="sparkgraft_dpo_")
+    path = scratch_dir("sparkgraft_dpo_")
     ev.write.mode("overwrite").partitionBy("day").parquet(path)
 
     # backfill: double 2024-01-01's values; dynamic mode replaces ONLY

@@ -8,11 +8,11 @@ skew-safe aggregation.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.config import scratch_dir
 from mapreduce6240project_spark.functions.numeric import stable_sum_micros
 from mapreduce6240project_spark.functions.distance import medoid_distance_literal
 from mapreduce6240project_spark.operators.clustering import assign_clusters
@@ -78,7 +78,7 @@ def _render_tweet_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = _render_tweet_csv(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sparkgraft_csv_")
+    out = scratch_dir("sparkgraft_csv_")
     lines.write.mode("overwrite").text(out)
     return ingest_tweets(spark, out)
 
@@ -94,7 +94,7 @@ def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_feature_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = feature_store(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sparkgraft_store_")
+    out = scratch_dir("sparkgraft_store_")
     write_feature_store(feats, out)
     back = spark.read.parquet(out)
     return (
@@ -237,7 +237,7 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "value"
     )
-    out = tempfile.mkdtemp(prefix="sparkgraft_json_")
+    out = scratch_dir("sparkgraft_json_")
     ev.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "event_id long, ts_us long, user_id long, event_type string, value double"
@@ -493,7 +493,7 @@ FROM events GROUP BY event_type""",
 def q_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce6240project_spark.streaming import streaming_foreach_batch_sink
 
-    out = tempfile.mkdtemp(prefix="sparkgraft_sink_")
+    out = scratch_dir("sparkgraft_sink_")
     return streaming_foreach_batch_sink(spark, sf_dir, out)
 
 

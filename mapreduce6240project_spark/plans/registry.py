@@ -492,8 +492,7 @@ def _kmedoids_k3_oracle() -> str:
 def q_kmedoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = feature_store(spark, sf_dir)
     # exact at any scale: the medoid update runs on the combo-compressed
-    # table (see operators.clustering.update_medoids), so no sampling cap
-    # is needed
+    # table (see operators.clustering.update_medoids)
     res = kmedoids(feats, k=3, max_iter=10, tol=0.0)
     return cluster_cost(res.assignments, res.medoids).select(
         "cluster", "n_members", "total_cost"

@@ -7,11 +7,11 @@ Registered into the shared REGISTRY (imported by plans/__init__).
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.config import scratch_dir
 from mapreduce6240project_spark.functions.numeric import stable_sum_micros
 from mapreduce6240project_spark.operators.clustering import elbow
 from mapreduce6240project_spark.operators.joins import as_of_join, interval_join
@@ -236,7 +236,7 @@ def q_tsv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats = feature_store(spark, sf_dir)
     assigned = assign_clusters(feats, MEDOIDS_BY_K[3]).select("tweet_id", "cluster")
-    out = tempfile.mkdtemp(prefix="sparkgraft_tsv_")
+    out = scratch_dir("sparkgraft_tsv_")
     assigned.write.mode("overwrite").options(sep="\t").csv(out)
     back = spark.read.options(sep="\t").schema("tweet_id long, cluster int").csv(out)
     return back.groupBy("cluster").agg(F.count("*").alias("n"))

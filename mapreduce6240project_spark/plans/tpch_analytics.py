@@ -25,13 +25,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from mapreduce6240project_spark.config import scratch_dir
 from mapreduce6240project_spark.plans.registry import _register
 from mapreduce6240project_spark.runtime import track
 from mapreduce6240project_spark.sources.tables import load_table
 from pyspark.sql import DataFrame, SparkSession, Window
 from typing import Iterator
 import pandas as pd
-import tempfile
 
 # =========================================================================
 # wave 7
@@ -1695,7 +1695,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 4's built-in XML codec end-to-end (schema inference on read
     is avoided by passing the writer's schema, matching production
     practice for schema-stable feeds)."""
-    out = tempfile.mkdtemp(prefix="sparkgraft_xml_") + "/nation"
+    out = scratch_dir("sparkgraft_xml_") + "/nation"
     nation = load_table(spark, sf_dir, "nation")
     nation.write.format("xml").option("rootTag", "nations").option(
         "rowTag", "nation"
@@ -2895,7 +2895,7 @@ def q_obt_export_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_c",
         )
     )
-    path = tempfile.mkdtemp(prefix="sparkgraft_obt_")
+    path = scratch_dir("sparkgraft_obt_")
     obt.write.mode("overwrite").partitionBy("region").parquet(path)
     back = spark.read.parquet(path)
     hv = hash60(

@@ -63,9 +63,11 @@ ACID properties and how they are obtained:
   against the table schema before writing anything.
 * **Isolation** -- readers replay the log at a fixed version: a
   snapshot never sees a half-committed change (snapshot isolation).
-  Writers use optimistic concurrency: they commit at
-  ``read_version + 1`` and get ``ConcurrentCommitError`` if another
-  writer won the slot; ``merge`` re-reads and re-derives on retry.
+  Writers use optimistic concurrency through one loop
+  (``TxTable._commit``): every op derives against the head it read,
+  commits at ``read_version + 1``, and when another writer won the
+  slot re-reads the new head and re-derives, up to
+  ``COMMIT_ATTEMPTS`` times before raising ``ConcurrentCommitError``.
 * **Durability** -- data and log are files; the commit fsyncs before
   linking.
 
@@ -92,6 +94,9 @@ from pyspark.sql import functions as F
 
 LOG_DIR = "_txlog"
 CHECKPOINT_EVERY = 10
+# lost optimistic-concurrency races one commit tolerates; each lost race
+# means another writer committed, so this bounds starvation, not errors
+COMMIT_ATTEMPTS = 20
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -217,10 +222,11 @@ class TxTable:
             return best, json.load(f)
 
     def _replay(self, version: int) -> dict:
-        """File-list state ``{"files": {path: rows}, "schema": s,
-        "txns": {app: last_version}, "constraints": {name: expr}}``
-        at ``version``, starting from the newest checkpoint <=
-        version."""
+        """State ``{"files": {path: add_entry}, "schema": s,
+        "txns": {app: last_version}, "constraints": {name: expr},
+        "generated": {name: expr}}`` at ``version``, starting from the
+        newest checkpoint <= version (the empty state when
+        ``version`` is -1)."""
         start = 0
         state: dict = {
             "files": {}, "schema": None, "txns": {},
@@ -229,16 +235,11 @@ class TxTable:
         cp = self._latest_checkpoint_at_most(version)
         if cp is not None:
             start, state = cp[0] + 1, cp[1]
-            state.setdefault("txns", {})  # pre-txn checkpoints
-            state.setdefault("constraints", {})  # pre-constraint cps
-            state.setdefault("generated", {})  # pre-generated cps
         for v in range(start, version + 1):
             with open(self._commit_path(v)) as f:
                 rec = json.load(f)
             for a in rec["adds"]:
-                # whole add entry (rows + zonemap stats); pre-stats
-                # checkpoints may hold bare ints -- readers handle both
-                state["files"][a["path"]] = a
+                state["files"][a["path"]] = a  # rows, stats, dv
             for r in rec["removes"]:
                 state["files"].pop(r, None)
             if rec.get("schema"):
@@ -263,10 +264,46 @@ class TxTable:
         foreachBatch sinks (the Delta txnAppId/txnVersion pattern:
         a replayed micro-batch sees its own version already in the log
         and skips)."""
-        v = self.latest_version()
+        return self._replay(self.latest_version())["txns"].get(app, -1)
+
+    def _at(self, version: int | None) -> tuple[int, dict]:
+        """``(v, state)`` for ``version`` (the head when None) -- a
+        missing table is an error, not an empty one."""
+        v = self.latest_version() if version is None else version
         if v < 0:
-            return -1
-        return self._replay(v)["txns"].get(app, -1)
+            raise FileNotFoundError(f"no table at {self.root}")
+        return v, self._replay(v)
+
+    def _commit(self, op: str, build) -> int:
+        """The one optimistic-concurrency loop every writer but
+        ``create`` publishes through.  Each attempt reads the head
+        ``v`` and replays it once, then calls ``build(v, state)``,
+        which validates and derives against that snapshot and returns
+        the record fields (``adds``, ``removes``, ``schema``, ...), or
+        None when there is nothing to commit (``v`` is returned).  The
+        record lands at ``v + 1``; if another writer took that slot,
+        the attempt is discarded -- anything it staged is an orphan
+        for vacuum -- and ``build`` runs again on the new head, at
+        most ``COMMIT_ATTEMPTS`` times.  Only an append may publish
+        version 0 (append-before-create); every other op needs a
+        table."""
+        for _ in range(COMMIT_ATTEMPTS):
+            v = self.latest_version()
+            if v < 0 and op != "append":
+                raise FileNotFoundError(f"no table at {self.root}")
+            fields = build(v, self._replay(v))
+            if fields is None:
+                return v
+            record = {"version": v + 1, "op": op, "adds": [],
+                      "removes": [], "schema": None, **fields}
+            try:
+                self._write_commit(v + 1, record)
+            except ConcurrentCommitError:
+                continue
+            return v + 1
+        raise ConcurrentCommitError(
+            f"{op} lost {COMMIT_ATTEMPTS} optimistic-concurrency races"
+        )
 
     # -- data-file plumbing ----------------------------------------------
 
@@ -327,7 +364,7 @@ class TxTable:
 
     def _load_dv(self, entry) -> list[int]:
         """Dead row indices for an add entry ([] when it has no DV)."""
-        dv = entry.get("dv") if isinstance(entry, dict) else None
+        dv = entry.get("dv")
         if not dv:
             return []
         with open(os.path.join(self.root, dv["path"])) as f:
@@ -338,8 +375,14 @@ class TxTable:
         """DV identity of an add entry -- (path, dv) is the unit of
         file-delta comparison once merge-on-read exists: the same data
         file under a different DV holds DIFFERENT live rows."""
-        dv = entry.get("dv") if isinstance(entry, dict) else None
+        dv = entry.get("dv")
         return dv["path"] if dv else None
+
+    @staticmethod
+    def _entry_files(entry: dict) -> list[str]:
+        """The files an add entry reads: its data file and its DV."""
+        dv = entry.get("dv")
+        return [entry["path"]] + ([dv["path"]] if dv else [])
 
     @staticmethod
     def _field_physical(f: dict) -> str:
@@ -382,8 +425,10 @@ class TxTable:
         with_meta: bool = False,
     ) -> DataFrame:
         """The one DV-aware reader every snapshot/rewrite path goes
-        through.  Reads ``paths`` (default: all of ``state``'s files)
-        under the COMMITTED schema (NULL-filling pre-evolution files),
+        through.  Reads the data files ``paths`` (names under root;
+        default: all of ``state``'s files) under the COMMITTED schema
+        (NULL-filling pre-evolution files, so a rewrite sees the
+        evolved width and post-DV liveness of every file era),
         then drops deletion-vector'd rows by anti-joining the
         broadcast dead (file, row_index) pairs against the parquet
         ``_metadata.row_index`` hidden column -- physical row order in
@@ -399,38 +444,23 @@ class TxTable:
 
         files = state["files"]
         if paths is None:
-            paths = [os.path.join(self.root, p) for p in sorted(files)]
-        schema = (
-            StructType.fromJson(json.loads(state["schema"]))
-            if state.get("schema") is not None
-            else None
-        )
+            paths = sorted(files)
         if not paths:
-            if schema is None:
-                raise FileNotFoundError(
-                    f"no committed schema at {self.root}"
-                )
+            schema = StructType.fromJson(json.loads(state["schema"]))
             empty = self.spark.createDataFrame([], schema=schema)
             if with_meta:
                 empty = empty.withColumn(
                     "_file", F.lit(None).cast("string")
                 ).withColumn("_row_idx", F.lit(None).cast("bigint"))
             return empty
-        dead_pairs: list[tuple[str, int]] = []
-        for p in paths:
-            b = os.path.basename(p)
-            for i in self._load_dv(files.get(b)):
-                dead_pairs.append((b, i))
+        dead_pairs = [(p, i) for p in paths for i in self._load_dv(files[p])]
+        paths = [os.path.join(self.root, p) for p in paths]
         # column mapping: files are read under their PHYSICAL names
         # (stable across renames) and aliased back to the logical
         # schema -- a pure projection, free inside codegen
-        mapping = self._mapping(state.get("schema"))
+        mapping = self._mapping(state["schema"])
         renamed = any(l != p for l, p in mapping)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(
-                self._physical_struct(state["schema"]) if renamed else schema
-            )
+        reader = self.spark.read.schema(self._physical_struct(state["schema"]))
         if not dead_pairs and not with_meta:
             if not renamed:
                 return reader.parquet(*paths)
@@ -466,16 +496,10 @@ class TxTable:
             df = df.join(F.broadcast(dead), ["_file", "_row_idx"], "left_anti")
         return df if with_meta else df.drop("_file", "_row_idx")
 
-    def _check_schema(
-        self, df: DataFrame, version: int, state: dict | None = None
-    ) -> None:
+    def _check_schema(self, df: DataFrame, state: dict) -> None:
         """Names AND types must match (nullable may differ -- parquet
         unions nullability harmlessly, but a type flip would commit
         mixed-physical-type files that poison every later read)."""
-        if state is None:
-            state = self._replay(version)
-        if state["schema"] is None:
-            return
         want = _schema_sig(json.loads(state["schema"])["fields"])
         got = _schema_sig(json.loads(df.schema.json())["fields"])
         if want != got:
@@ -483,14 +507,14 @@ class TxTable:
                 f"schema mismatch: table has {want}, write has {got}"
             )
 
-    def _check_constraints(self, df: DataFrame, state: dict | None) -> None:
+    def _check_constraints(self, df: DataFrame, state: dict) -> None:
         """Reject ``df`` if any row VIOLATES a table CHECK constraint
         (SQL CHECK semantics: a row satisfies when the expression is
         TRUE or NULL; only FALSE violates -- the public Delta
         behavior).  One bounded probe per distinct constraint set:
         ``take(1)`` of the violating rows, so the driver sees at most
         one row and the scan short-circuits on the first hit."""
-        cons = (state or {}).get("constraints") or {}
+        cons = state["constraints"]
         if not cons:
             return
         bad = F.lit(False)
@@ -503,7 +527,7 @@ class TxTable:
                 f"offending row {hit[0].asDict()}"
             )
 
-    def _apply_generated(self, df: DataFrame, state: dict | None) -> DataFrame:
+    def _apply_generated(self, df: DataFrame, state: dict) -> DataFrame:
         """GENERATED-column write path (the Delta ``GENERATED ALWAYS
         AS`` semantics): for each registered (name, expr), a batch
         that OMITS the column gets it computed (cast to the committed
@@ -512,17 +536,14 @@ class TxTable:
         null-safe-equal to the expression -- so a writer can never
         commit a value that contradicts the definition.  Filled
         columns are re-ordered to the committed schema positions."""
-        gen = (state or {}).get("generated") or {}
+        gen = state["generated"]
         if not gen:
             return df
         from pyspark.sql.types import StructType
 
-        fields: dict = {}
-        order: list[str] = []
-        if state.get("schema"):
-            committed = StructType.fromJson(json.loads(state["schema"]))
-            fields = {f.name: f.dataType for f in committed.fields}
-            order = [f.name for f in committed.fields]
+        committed = StructType.fromJson(json.loads(state["schema"]))
+        fields = {f.name: f.dataType for f in committed.fields}
+        order = [f.name for f in committed.fields]
         filled = False
         for name, expr in gen.items():
             target = F.expr(expr)
@@ -546,9 +567,7 @@ class TxTable:
 
     # -- public API ------------------------------------------------------
 
-    def rename_column(
-        self, old: str, new: str, max_retries: int = 3
-    ) -> int:
+    def rename_column(self, old: str, new: str) -> int:
         """RENAME COLUMN as an O(1) metadata commit (the Delta
         column-mapping design): no data file is rewritten.  The
         renamed field keeps its stable PHYSICAL name in the schema
@@ -565,13 +584,9 @@ class TxTable:
         silently dangle -- the same restriction Delta imposes)."""
         import re as _re
 
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            state = self._replay(v)
-            if state["schema"] is None:
-                raise ValueError(f"no committed schema at {self.root}")
+        pat = _re.compile(rf"\b{_re.escape(old)}\b")
+
+        def build(v: int, state: dict) -> dict:
             fields = json.loads(state["schema"])["fields"]
             names = [f["name"] for f in fields]
             if old not in names:
@@ -582,7 +597,6 @@ class TxTable:
                 raise ValueError(
                     f"rename_column: {new!r} already exists"
                 )
-            pat = _re.compile(rf"\b{_re.escape(old)}\b")
             for kind, defs in (
                 ("CHECK constraint", state["constraints"]),
                 ("GENERATED column", state["generated"]),
@@ -607,26 +621,13 @@ class TxTable:
                 else f
                 for f in fields
             ]
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "renameColumn", "adds": [],
-                     "removes": [],
-                     "schema": json.dumps(
-                         {"type": "struct", "fields": new_fields}
-                     )},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"rename_column lost {max_retries} races"
-        )
+            return {"schema": json.dumps(
+                {"type": "struct", "fields": new_fields}
+            )}
 
-    def set_generated_column(
-        self, name: str, expr: str, max_retries: int = 3
-    ) -> int:
+        return self._commit("renameColumn", build)
+
+    def set_generated_column(self, name: str, expr: str) -> int:
         """Register ``name`` (an EXISTING table column) as GENERATED
         ALWAYS AS ``expr``: subsequent appends/merges may omit the
         column (it is computed) and must agree with the definition
@@ -634,80 +635,41 @@ class TxTable:
         snapshot is validated first -- the definition only commits if
         every existing row already satisfies it, so readers can treat
         the invariant as total across all versions >= this commit."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            state = self._replay(v)
-            cols = (
-                [f["name"] for f in json.loads(state["schema"])["fields"]]
-                if state["schema"]
-                else []
-            )
+
+        def build(v: int, state: dict) -> dict:
+            cols = [f["name"] for f in json.loads(state["schema"])["fields"]]
             if name not in cols:
                 raise ValueError(
                     f"generated column {name!r} is not a table column "
                     f"(have {cols}); generated columns define EXISTING "
                     f"columns, they do not evolve the schema"
                 )
-            probe = {
-                "generated": {name: expr},
-                "schema": state["schema"],
-            }
+            probe = {"generated": {name: expr}, "schema": state["schema"]}
             self._apply_generated(self._scan(state), probe)
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "setGenerated", "adds": [],
-                     "removes": [], "schema": None,
-                     "generated": {"name": name, "expr": expr}},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"set_generated_column lost {max_retries} races"
-        )
+            return {"generated": {"name": name, "expr": expr}}
 
-    def drop_generated_column(self, name: str, max_retries: int = 3) -> int:
+        return self._commit("setGenerated", build)
+
+    def drop_generated_column(self, name: str) -> int:
         """Stop treating ``name`` as generated (the column itself
         stays; writers must supply it again)."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            if name not in self._replay(v)["generated"]:
+
+        def build(v: int, state: dict) -> dict:
+            if name not in state["generated"]:
                 raise KeyError(
                     f"no generated column {name!r} at {self.root}"
                 )
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "dropGenerated", "adds": [],
-                     "removes": [], "schema": None,
-                     "drop_generated": name},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"drop_generated_column lost {max_retries} races"
-        )
+            return {"drop_generated": name}
+
+        return self._commit("dropGenerated", build)
 
     def generated_columns(
         self, version: int | None = None
     ) -> dict[str, str]:
         """The active generated-column definitions at ``version``."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no table at {self.root}")
-        return dict(self._replay(v)["generated"])
+        return dict(self._at(version)[1]["generated"])
 
-    def add_constraint(
-        self, name: str, expr: str, max_retries: int = 3
-    ) -> int:
+    def add_constraint(self, name: str, expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT (the Delta CHECK-constraint
         design): record ``expr`` (a SQL boolean over the table's
         columns) in the log; every subsequent append/merge validates
@@ -720,57 +682,27 @@ class TxTable:
         commit, because its version slot is gone -- its retry replays
         against the new head and revalidates under the new
         constraint set."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            state = self._replay(v)
+
+        def build(v: int, state: dict) -> dict:
             probe = {"constraints": {name: expr}}
             self._check_constraints(self._scan(state), probe)
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "setConstraint", "adds": [],
-                     "removes": [], "schema": None,
-                     "constraint": {"name": name, "expr": expr}},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue  # revalidate against the winner's snapshot
-        raise ConcurrentCommitError(
-            f"add_constraint lost {max_retries} races"
-        )
+            return {"constraint": {"name": name, "expr": expr}}
 
-    def drop_constraint(self, name: str, max_retries: int = 3) -> int:
+        return self._commit("setConstraint", build)
+
+    def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT: stop enforcing ``name``."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            if name not in self._replay(v)["constraints"]:
+
+        def build(v: int, state: dict) -> dict:
+            if name not in state["constraints"]:
                 raise KeyError(f"no constraint {name!r} at {self.root}")
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "dropConstraint", "adds": [],
-                     "removes": [], "schema": None,
-                     "drop_constraint": name},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"drop_constraint lost {max_retries} races"
-        )
+            return {"drop_constraint": name}
+
+        return self._commit("dropConstraint", build)
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """The active CHECK constraints at ``version`` (name -> SQL)."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no table at {self.root}")
-        return dict(self._replay(v)["constraints"])
+        return dict(self._at(version)[1]["constraints"])
 
     def create(self, df: DataFrame) -> int:
         """Create the table as version 0.  Fails if it already exists."""
@@ -788,12 +720,7 @@ class TxTable:
         )
         return 0
 
-    def append(
-        self,
-        df: DataFrame,
-        merge_schema: bool = False,
-        max_retries: int = 20,
-    ) -> int:
+    def append(self, df: DataFrame, merge_schema: bool = False) -> int:
         """Append new files.  ``merge_schema=True`` permits SCHEMA
         EVOLUTION: ``df`` may carry new columns appended after the
         table's existing fields (which must still match by name and
@@ -809,41 +736,34 @@ class TxTable:
         without any rewrite.  Schema validation re-runs against the new
         head each retry: if the winner evolved the schema out from
         under us, the append fails loudly and vacuum collects the
-        staged files.  The retry budget is higher than merge's because
-        retries here are JSON-only, never a data rewrite.  (Found by
-        the optimize-vs-append race test: the un-retried append
-        surfaced ConcurrentCommitError at the caller.)"""
+        staged files.  (Found by the optimize-vs-append race test: the
+        un-retried append surfaced ConcurrentCommitError at the
+        caller.)"""
         # GENERATED columns resolve against the head ONCE (filling
         # changes the frame that gets staged, and staging happens
         # exactly once); a concurrent metadata change lands as a
         # schema/constraint revalidation failure on retry, never as a
         # silently stale fill of already-staged files
-        v0 = self.latest_version()
-        df = self._apply_generated(
-            df, self._replay(v0) if v0 >= 0 else None
-        )
+        df = self._apply_generated(df, self._replay(self.latest_version()))
         adds: list | None = None
-        validated_sig: object = object()  # matches no real signature
-        for _ in range(max_retries):
-            v = self.latest_version()
-            evolved: str | None = None
-            state = self._replay(v) if v >= 0 else None
+        validated: object = object()  # matches no real constraint set
+
+        def build(v: int, state: dict) -> dict:
+            nonlocal adds, validated
             # CHECK constraints: validate the incoming rows, but only
             # when the constraint set differs from the one already
             # validated -- retries stay JSON-only unless a concurrent
             # setConstraint actually changed the rules out from under
             # us (then the revalidation IS the enforcement gap closing)
-            sig = tuple(sorted(((state or {}).get("constraints") or {}).items()))
-            if sig != validated_sig:
+            cons = tuple(sorted(state["constraints"].items()))
+            if cons != validated:
                 self._check_constraints(df, state)
-                validated_sig = sig
-            if state is None or state["schema"] is None:
-                # new table (append-before-create) or a legacy log with
-                # no recorded schema: record df's schema NOW, mirroring
-                # create(), so validation is armed from this commit
-                # onward and snapshot() of a later-emptied table still
-                # has a schema to return (it would otherwise commit
-                # schema: None forever and never validate)
+                validated = cons
+            evolved: str | None = None
+            if state["schema"] is None:
+                # new table (append-before-create): record df's schema
+                # NOW, mirroring create(), so validation is armed from
+                # this commit onward
                 evolved = df.schema.json()
             elif merge_schema:
                 want = json.loads(state["schema"])["fields"]
@@ -881,25 +801,14 @@ class TxTable:
                         {"type": "struct", "fields": merged}
                     )
             else:
-                self._check_schema(df, v, state=state)
+                self._check_schema(df, state)
             if adds is None:  # stage the data files exactly once
                 adds = self._write_data_files(
-                    df,
-                    evolved or (state["schema"] if state else None),
+                    df, evolved or state["schema"]
                 )
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "append", "adds": adds,
-                     "removes": [], "schema": evolved},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"append lost {max_retries} optimistic-concurrency races"
-        )
+            return {"adds": adds, "schema": evolved}
+
+        return self._commit("append", build)
 
     def snapshot(self, version: int | None = None) -> DataFrame:
         """The table as of ``version`` (latest when None) -- time
@@ -912,34 +821,14 @@ class TxTable:
         with a deletion vector have their dead rows dropped (the
         merge-on-read scan); a table with no DVs reads as a plain
         multi-path parquet scan with zero overhead."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no table at {self.root}")
-        return self._scan(self._replay(v))
-
-    def _read_files(self, paths: list[str], state: dict) -> DataFrame:
-        """Read specific data files under the committed schema (same
-        NULL-fill and DV semantics as snapshot -- a merge/delete
-        rewrite must see post-evolution width and post-DV liveness
-        even for pre-evolution files)."""
-        return self._scan(state, paths=paths)
+        return self._scan(self._at(version)[1])
 
     def count(self, version: int | None = None) -> int:
         """Exact row count from log statistics -- no data scan.
         A deletion vector's cardinality is netted off its file's
         physical rows (indices are unique within a DV by
         construction, so the subtraction is exact)."""
-        v = self.latest_version() if version is None else version
-        if v < 0:  # same contract as snapshot(): a missing table is an
-            # error, not an empty one (review finding)
-            raise FileNotFoundError(f"no table at {self.root}")
-        total = 0
-        for e in self._replay(v)["files"].values():
-            if isinstance(e, dict):
-                total += e["rows"] - (e.get("dv") or {}).get("cardinality", 0)
-            else:
-                total += e
-        return total
+        return self.describe_detail(version)["n_rows"]
 
     def describe_detail(self, version: int | None = None) -> dict:
         """Log-only table facts (the DESCRIBE DETAIL analogue): file
@@ -947,31 +836,17 @@ class TxTable:
         total dead-row cardinality.  O(log) JSON, no data scan --
         this is how protocol assertions ("the DV delete rewrote no
         data file") are checked without reading the table."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no table at {self.root}")
-        state = self._replay(v)
-        files = sorted(state["files"])
-        phys = net = n_dvs = dv_rows = 0
-        for e in state["files"].values():
-            rows = e["rows"] if isinstance(e, dict) else e
-            card = (
-                (e.get("dv") or {}).get("cardinality", 0)
-                if isinstance(e, dict)
-                else 0
-            )
-            phys += rows
-            net += rows - card
-            if card or (isinstance(e, dict) and e.get("dv")):
-                n_dvs += 1
-            dv_rows += card
+        v, state = self._at(version)
+        dvs = [e["dv"] for e in state["files"].values() if e.get("dv")]
+        phys = sum(e["rows"] for e in state["files"].values())
+        dv_rows = sum(dv["cardinality"] for dv in dvs)
         return {
             "version": v,
-            "n_files": len(files),
-            "files": files,
+            "n_files": len(state["files"]),
+            "files": sorted(state["files"]),
             "physical_rows": phys,
-            "n_rows": net,
-            "n_dvs": n_dvs,
+            "n_rows": phys - dv_rows,
+            "n_dvs": len(dvs),
             "dv_rows": dv_rows,
         }
 
@@ -990,30 +865,24 @@ class TxTable:
         ``column`` is conservatively read.  ``optimize(zorder_by=
         [column])`` is what makes these zonemaps disjoint and the
         skipping effective."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no table at {self.root}")
-        state = self._replay(v)
+        _, state = self._at(version)
         files = state["files"]
         # footer stats are keyed by the stable PHYSICAL column name
         # (column mapping): resolve the logical query column first
-        phys = dict(self._mapping(state.get("schema"))).get(column, column)
+        phys = dict(self._mapping(state["schema"])).get(column, column)
         keep = []
         for path in sorted(files):
-            entry = files[path]
-            stats = entry.get("stats", {}) if isinstance(entry, dict) else {}
-            rng = stats.get(phys)
+            rng = files[path]["stats"].get(phys)
             if rng is not None and (rng[0] > upper or rng[1] < lower):
                 continue  # provably disjoint: skip the file
-            keep.append(os.path.join(self.root, path))
+            keep.append(path)
         if not keep:
-            empty = self.snapshot(v).limit(0)
-            return empty, 0, len(files)
+            return self._scan(state).limit(0), 0, len(files)
         # pin the committed schema (same NULL-fill semantics as
         # snapshot()): after append(merge_schema=True) a pruned read
         # over pre-evolution files must still carry the evolved column
         # rather than a footer-sampled narrower schema
-        df = self._read_files(keep, state).filter(
+        df = self._scan(state, paths=keep).filter(
             (F.col(column) >= F.lit(lower)) & (F.col(column) <= F.lit(upper))
         )
         return df, len(keep), len(files)
@@ -1022,7 +891,6 @@ class TxTable:
         self,
         source: DataFrame,
         key_cols: list[str],
-        max_retries: int = 3,
         txn: tuple[str, int] | None = None,
     ) -> int:
         """Copy-on-write MERGE (upsert): source rows REPLACE current
@@ -1042,19 +910,12 @@ class TxTable:
         micro-batch cannot double-apply.  The guard re-checks inside
         the retry loop, so a race lost to our own earlier attempt is
         also caught."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            # one replay per attempt, shared by the txn guard and the
-            # schema check (review finding: the guard, the check, and
-            # a dead assignment each replayed the log separately)
-            state = self._replay(v) if v >= 0 else None
-            if txn is not None and state is not None:
-                if state["txns"].get(txn[0], -1) >= txn[1]:
-                    return v  # already applied; idempotent skip
-            if state is None:
-                raise FileNotFoundError(f"no table at {self.root}")
+
+        def build(v: int, state: dict) -> dict | None:
+            if txn is not None and state["txns"].get(txn[0], -1) >= txn[1]:
+                return None  # already applied; idempotent skip
             src = self._apply_generated(source, state)
-            self._check_schema(src, v, state=state)
+            self._check_schema(src, state)
             self._check_constraints(src, state)
             # _scan(with_meta) derives _file from _metadata.file_path,
             # which stays valid through the semi-join (and through the
@@ -1067,40 +928,23 @@ class TxTable:
                 r._file
                 for r in affected_rows.select("_file").distinct().collect()
             ]
-            aff_paths = [os.path.join(self.root, p) for p in affected]
-            if aff_paths:
-                old_affected = self._read_files(aff_paths, state)
-                survivors = old_affected.join(
+            new_df = src
+            if affected:
+                survivors = self._scan(state, paths=affected).join(
                     F.broadcast(keys), key_cols, "left_anti"
                 )
                 new_df = survivors.unionByName(src)
-            else:
-                new_df = src
-            adds = self._write_data_files(new_df, state["schema"])
-            nv = v + 1
             rec = {
-                "version": nv,
-                "op": "merge",
-                "adds": adds,
+                "adds": self._write_data_files(new_df, state["schema"]),
                 "removes": affected,
-                "schema": None,
             }
             if txn is not None:
                 rec["txn"] = {"app": txn[0], "version": txn[1]}
-            try:
-                self._write_commit(nv, rec)
-                return nv
-            except ConcurrentCommitError:
-                # lost the race: orphan the staged files (vacuum will
-                # collect them) and re-derive against the new snapshot
-                continue
-        raise ConcurrentCommitError(
-            f"merge lost {max_retries} optimistic-concurrency races"
-        )
+            return rec
 
-    def delete_where(
-        self, condition, max_retries: int = 3, mode: str = "cow"
-    ) -> int:
+        return self._commit("merge", build)
+
+    def delete_where(self, condition, mode: str = "cow") -> int:
         """DELETE rows matching ``condition`` (NULL predicate rows
         survive, per SQL DELETE semantics).
 
@@ -1119,107 +963,66 @@ class TxTable:
         are physical, so they stay valid under any earlier DV).
         Trade: cheap deletes, a small per-scan anti-join -- wrong for
         GDPR (bytes remain until OPTIMIZE + vacuum), right for
-        high-churn CDC tables."""
-        if mode == "mor":
-            return self._delete_where_mor(condition, max_retries)
-        if mode != "cow":
+        high-churn CDC tables.
+
+        Either mode re-derives the matched set on the new head after
+        a lost race; deleting nothing commits nothing."""
+        if mode not in ("cow", "mor"):
             raise ValueError(f"delete_where mode must be cow|mor: {mode}")
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            state = self._replay(v)
-            cur = self._scan(state, with_meta=True)
+
+        def build(v: int, state: dict) -> dict | None:
+            scan = self._scan(state, with_meta=True).filter(condition)
+            if mode == "mor":
+                return self._dv_delete(state, scan)
             affected = [
-                r._file
-                for r in cur.filter(condition)
-                .select("_file")
-                .distinct()
-                .collect()
+                r._file for r in scan.select("_file").distinct().collect()
             ]
             if not affected:
-                return v  # nothing to do; no empty commit
-            aff_paths = [os.path.join(self.root, p) for p in affected]
+                return None
             # null-safe negation: a row where the predicate evaluates
             # NULL is NOT deleted (SQL DELETE semantics), so it must
             # survive the rewrite of its file -- a bare ~condition
             # would silently drop it
-            keep = self._read_files(aff_paths, state).filter(
+            keep = self._scan(state, paths=affected).filter(
                 ~F.coalesce(condition, F.lit(False))
             )
-            adds = self._write_data_files(keep, state["schema"])
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "delete", "adds": adds,
-                     "removes": affected, "schema": None},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"delete lost {max_retries} optimistic-concurrency races"
-        )
+            return {
+                "adds": self._write_data_files(keep, state["schema"]),
+                "removes": affected,
+            }
 
-    def _delete_where_mor(self, condition, max_retries: int) -> int:
-        """Deletion-vector DELETE body (see ``delete_where``): one
-        DV-applied scan finds the matching (file, row_index) pairs,
-        aggregated per file and collected -- driver state is bounded
-        by the matched-row count, the same bound the DV files
+        return self._commit("delete", build)
+
+    def _dv_delete(self, state: dict, matched: DataFrame) -> dict | None:
+        """Deletion-vector DELETE record (see ``delete_where``): the
+        DV-applied scan's ``matched`` rows are aggregated per file
+        into (file, row_index) lists and collected -- driver state is
+        bounded by the matched-row count, the same bound the DV files
         themselves carry (at warehouse scale the per-file bitmap
         encode would run in executors and ship opaque blobs; the
         commit shape is identical).  The commit re-adds each affected
         file's entry (stats and all) under its new unioned vector and
         removes nothing, so replay overwrites in place and every
-        untouched file is simply never mentioned."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            if v < 0:
-                raise FileNotFoundError(f"no table at {self.root}")
-            state = self._replay(v)
-            if not state["files"]:
-                return v  # empty table; nothing to delete
-            scan = self._scan(state, with_meta=True)
-            hits = (
-                scan.filter(condition)
-                .groupBy("_file")
-                .agg(F.sort_array(F.collect_list("_row_idx")).alias("dead"))
-                .collect()
-            )
-            if not hits:
-                return v  # no matches; no empty commit
-            adds = []
-            for r in sorted(hits, key=lambda r: r._file):
-                e = state["files"][r._file]
-                entry = dict(e) if isinstance(e, dict) else {"rows": e}
-                entry["path"] = r._file
-                merged = sorted(set(self._load_dv(entry)) | set(r.dead))
-                entry["dv"] = self._write_dv(merged)
-                adds.append(entry)
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "delete", "adds": adds,
-                     "removes": [], "schema": None},
-                )
-                return nv
-            except ConcurrentCommitError:
-                # lost the race: the staged dv-* files are orphans
-                # (vacuum collects them); re-derive on the new head --
-                # the matched set and the union base both may have
-                # changed
-                continue
-        raise ConcurrentCommitError(
-            f"delete lost {max_retries} optimistic-concurrency races"
+        untouched file is simply never mentioned.  The staged dv-*
+        files of a lost race are orphans vacuum collects."""
+        hits = (
+            matched.groupBy("_file")
+            .agg(F.sort_array(F.collect_list("_row_idx")).alias("dead"))
+            .collect()
         )
+        if not hits:
+            return None
+        adds = []
+        for r in sorted(hits, key=lambda r: r._file):
+            e = state["files"][r._file]
+            dead = sorted(set(self._load_dv(e)) | set(r.dead))
+            adds.append({**e, "dv": self._write_dv(dead)})
+        return {"adds": adds}
 
     def optimize(
         self,
         target_files: int = 1,
         zorder_by: list[str] | None = None,
-        max_retries: int = 3,
     ) -> int:
         """Compaction (OPTIMIZE): rewrite the current snapshot into
         ``target_files`` files -- the small-file answer for a table
@@ -1239,21 +1042,13 @@ class TxTable:
         file set for the compacted one, and any concurrent
         append/merge wins the race cleanly (we retry on the new
         snapshot)."""
-        for _ in range(max_retries):
-            v = self.latest_version()
-            state = self._replay(v)
+
+        def build(v: int, state: dict) -> dict | None:
             olds = sorted(state["files"])
-            has_dv = any(
-                isinstance(e, dict) and e.get("dv")
-                for e in state["files"].values()
-            )
-            if (
-                len(olds) <= target_files
-                and zorder_by is None
-                and not has_dv
-            ):
-                return v  # nothing to compact/purge; no empty commit
-            cur = self.snapshot(v)
+            has_dv = any(e.get("dv") for e in state["files"].values())
+            if len(olds) <= target_files and zorder_by is None and not has_dv:
+                return None  # nothing to compact/purge
+            cur = self._scan(state)
             if zorder_by and len(zorder_by) == 2:
                 from mapreduce6240project_spark.sources.layout import (
                     zorder_key,
@@ -1276,20 +1071,12 @@ class TxTable:
                 ).sortWithinPartitions(*zorder_by)
             else:
                 cur = cur.coalesce(target_files)
-            adds = self._write_data_files(cur, state["schema"])
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "optimize", "adds": adds,
-                     "removes": olds, "schema": None},
-                )
-                return nv
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(
-            f"optimize lost {max_retries} optimistic-concurrency races"
-        )
+            return {
+                "adds": self._write_data_files(cur, state["schema"]),
+                "removes": olds,
+            }
+
+        return self._commit("optimize", build)
 
     def vacuum(
         self, retain_versions: int = 1, min_age_seconds: float = 600.0
@@ -1310,14 +1097,11 @@ class TxTable:
         latest = self.latest_version()
         keep: set[str] = set()
         for v in range(max(0, latest - retain_versions + 1), latest + 1):
-            st = self._replay(v)
-            keep |= set(st["files"])
             # a retained version's deletion vectors are part of its
             # read path -- collecting one would silently resurrect
             # its file's dead rows
-            for e in st["files"].values():
-                if isinstance(e, dict) and e.get("dv"):
-                    keep.add(e["dv"]["path"])
+            for e in self._replay(v)["files"].values():
+                keep.update(self._entry_files(e))
         cutoff = time.time() - min_age_seconds
         deleted = []
         for f in os.listdir(self.root):
@@ -1334,12 +1118,7 @@ class TxTable:
                 deleted.append(f)
         return sorted(deleted)
 
-    def restore(
-        self,
-        version: int,
-        max_retries: int = 3,
-        _verify: bool = True,
-    ) -> int:
+    def restore(self, version: int, _verify: bool = True) -> int:
         """RESTORE TABLE ... TO VERSION: make ``version``'s file set
         the new head as a NEW commit (the Delta restore semantics --
         history stays linear and append-only, nothing is rewritten or
@@ -1371,24 +1150,19 @@ class TxTable:
             raise FileNotFoundError(
                 f"no version {version} at {self.root}"
             )
-        for _ in range(max_retries):
-            v = self.latest_version()
-            old = self._replay(version)
-            cur = self._replay(v)
-            adds = []
-            for p, e in old["files"].items():
-                # an entry equal in the current head needs no re-add;
-                # SAME path under a DIFFERENT deletion vector (or a
-                # changed entry generally) must be re-added -- the
-                # liveness set, not the file name, is the identity
-                if cur["files"].get(p) == e:
-                    continue
-                entry = dict(e) if isinstance(e, dict) else {"rows": e}
-                entry.setdefault("path", p)
-                needed = [p] + (
-                    [entry["dv"]["path"]] if entry.get("dv") else []
-                )
-                for fname in needed:
+        old = self._replay(version)
+        readded: list[dict] = []
+
+        def build(v: int, cur: dict) -> dict:
+            # an entry equal in the current head needs no re-add; SAME
+            # path under a DIFFERENT deletion vector (or a changed
+            # entry generally) must be re-added -- the liveness set,
+            # not the file name, is the identity
+            readded[:] = [
+                e for p, e in old["files"].items() if cur["files"].get(p) != e
+            ]
+            for e in readded:
+                for fname in self._entry_files(e):
                     if not os.path.exists(os.path.join(self.root, fname)):
                         # a vacuum past the retention window collected
                         # the old version's file (data or deletion
@@ -1398,50 +1172,34 @@ class TxTable:
                             f"cannot restore to version {version}: "
                             f"file {fname} was vacuumed"
                         )
-                adds.append(entry)
             removes = [p for p in cur["files"] if p not in old["files"]]
-            nv = v + 1
-            try:
-                self._write_commit(
-                    nv,
-                    {"version": nv, "op": "restore", "adds": adds,
-                     "removes": removes, "schema": old["schema"]},
-                )
-            except ConcurrentCommitError:
-                continue
-            # post-commit re-verify (TOCTOU close, r9 ADVICE): a vacuum
-            # racing between the pre-commit check and the link can have
-            # collected a re-added file; restore BACK and fail loudly
-            # rather than leave a head that errors at scan time.
-            missing = (
-                [
-                    fname
-                    for e in adds
-                    for fname in (
-                        [e["path"]]
-                        + ([e["dv"]["path"]] if e.get("dv") else [])
-                    )
-                    if not os.path.exists(os.path.join(self.root, fname))
-                ]
-                if _verify
-                else []
+            return {"adds": readded, "removes": removes,
+                    "schema": old["schema"]}
+
+        nv = self._commit("restore", build)
+        # post-commit re-verify (TOCTOU close): a vacuum
+        # racing between the pre-commit check and the link can have
+        # collected a re-added file; restore BACK and fail loudly
+        # rather than leave a head that errors at scan time.
+        missing = [
+            fname
+            for e in (readded if _verify else [])
+            for fname in self._entry_files(e)
+            if not os.path.exists(os.path.join(self.root, fname))
+        ]
+        if missing:
+            # compensate: RESTORE back to the pre-restore head (its
+            # files were live one version ago; retain_versions >= 2
+            # vacuums keep them), then fail loudly.  _verify=False
+            # stops a pathological all-files-vacuumed scenario from
+            # recursing through compensations of compensations.
+            self.restore(nv - 1, _verify=False)
+            raise FileNotFoundError(
+                f"cannot restore to version {version}: data files "
+                f"{sorted(missing)} were vacuumed concurrently; "
+                f"table restored back to the version-{nv - 1} file set"
             )
-            if missing:
-                # compensate: RESTORE back to the pre-restore head (its
-                # files were live one version ago; retain_versions >= 2
-                # vacuums keep them), then fail loudly.  _verify=False
-                # stops a pathological all-files-vacuumed scenario from
-                # recursing through compensations of compensations.
-                self.restore(v, _verify=False)
-                raise FileNotFoundError(
-                    f"cannot restore to version {version}: data files "
-                    f"{sorted(missing)} were vacuumed concurrently; "
-                    f"table restored back to the version-{v} file set"
-                )
-            return nv
-        raise ConcurrentCommitError(
-            f"restore lost {max_retries} optimistic-concurrency races"
-        )
+        return nv
 
     def changes(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level change feed between two versions (the Delta
@@ -1480,10 +1238,9 @@ class TxTable:
             # state): the old side must show its THEN-live rows,
             # NULL-filled to the evolved width like snapshot()
             if not paths:
-                return self.snapshot(v_to).limit(0)
-            return self._read_files(
-                [os.path.join(self.root, p) for p in paths],
-                {"files": side["files"], "schema": st["schema"]},
+                return self._scan(st).limit(0)
+            return self._scan(
+                {"files": side["files"], "schema": st["schema"]}, paths
             )
 
         new_rows, old_rows = _read(added, st), _read(removed, sf)

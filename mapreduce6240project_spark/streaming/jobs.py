@@ -22,11 +22,11 @@ custom stateful logic beyond windows/sessions.
 from __future__ import annotations
 
 import glob
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.config import scratch_dir
 from mapreduce6240project_spark.functions.numeric import stable_sum_micros
 from mapreduce6240project_spark.sources.tables import load_table
 
@@ -43,7 +43,7 @@ def _drain_to_parquet(spark: SparkSession, sdf: DataFrame, mode: str) -> DataFra
     whole result each batch, so only the last epoch is read;
     ``append``/``update`` modes emit disjoint/augmenting rows, so all
     epochs are read."""
-    out = tempfile.mkdtemp(prefix="sparkgraft_sink_")
+    out = scratch_dir("sparkgraft_sink_")
     schema = sdf.schema
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -483,7 +483,7 @@ def streaming_tws_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # key's row each batch it changes, and with negative values the
         # running total is NOT monotone -- the LAST emission per key is
         # the final state, never the max
-        out = tempfile.mkdtemp(prefix="sparkgraft_tws_")
+        out = scratch_dir("sparkgraft_tws_")
 
         def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
@@ -553,7 +553,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _stream_events(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sparkgraft_hllregs_")
+    out = scratch_dir("sparkgraft_hllregs_")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         days = batch_df.select(
@@ -754,7 +754,7 @@ def streaming_qsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _stream_events(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sparkgraft_qsk_")
+    out = scratch_dir("sparkgraft_qsk_")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         quantile_sketch(batch_df, "value").write.mode("overwrite").parquet(

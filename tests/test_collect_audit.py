@@ -200,3 +200,15 @@ def test_driver_materialization_inventory_is_pinned():
 def test_every_inventory_entry_has_a_real_argument():
     for f, (_n, why) in INVENTORY.items():
         assert len(why) >= 15, f"{f}: justification too thin"
+
+
+def test_scratch_directories_come_from_config():
+    """One scratch-directory policy: ``config.scratch_dir`` is the only
+    ``tempfile.mkdtemp`` caller, so every directory a query writes is
+    removed when the process exits instead of piling up in $TMPDIR."""
+    callers = [
+        str(py.relative_to(PKG))
+        for py in sorted(PKG.rglob("*.py"))
+        if "mkdtemp(" in py.read_text()
+    ]
+    assert callers == ["config.py"], callers

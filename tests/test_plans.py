@@ -103,7 +103,10 @@ def test_fan_out_is_noop_on_wide_input(spark):
     )
     assert fan_out(wide) is wide  # zero plan change
     narrow = load_table(spark, SF, "lineitem")
-    assert fan_out(narrow).rdd.getNumPartitions() >= 32
+    assert (
+        fan_out(narrow).rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
 
 
 def test_topk_uses_take_ordered(spark):

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.sources.txlog import (
+    COMMIT_ATTEMPTS,
     ConcurrentCommitError,
     TxTable,
 )
@@ -256,7 +257,10 @@ def test_snapshot_where_skips_files_after_zorder(spark, tmp_path):
     t.create(
         spark.createDataFrame(
             [(i, f"v{i}") for i in range(1000)], "k INT, val STRING"
-        ).repartition(8)  # hash-partitioned: every file spans ~[0,1000)
+        # k % 8 buckets: every file spans at least [7, 992] on any core
+        # count (a bare repartition(8) round-robins by the input
+        # partitioning, which follows the cores)
+        ).repartition(8, F.col("k") % 8)
     )
     df0, read0, total0 = t.snapshot_where("k", 10, 20)
     assert total0 == read0  # overlapping zonemaps: nothing skippable
@@ -445,6 +449,65 @@ class TestCrashSafety:
         assert tbl.count(v) == 101
 
 
+_SCHEMA = "k INT, val STRING"
+_GEN = "concat('v', CAST(k AS STRING))"
+_BASE = {(i, f"v{i}") for i in range(100)}
+_STOLEN = (777, "v777")  # k % 7 == 0 and val == _GEN
+_NO_META = ({}, {})
+
+# case -> (setup, op(tbl, frame), logged op, rows after,
+#          (constraints, generated columns) after)
+_RACED = {
+    "append": (
+        None, lambda t, df: t.append(df([(500, "v500")])), "append",
+        _BASE | {_STOLEN, (500, "v500")}, _NO_META,
+    ),
+    "merge": (
+        None, lambda t, df: t.merge(df([(777, "UPD")]), ["k"]), "merge",
+        _BASE | {(777, "UPD")}, _NO_META,
+    ),
+    "delete_cow": (
+        None, lambda t, df: t.delete_where(F.col("k") % 7 == 0), "delete",
+        {r for r in _BASE if r[0] % 7}, _NO_META,
+    ),
+    "delete_mor": (
+        None,
+        lambda t, df: t.delete_where(F.col("k") % 7 == 0, mode="mor"),
+        "delete", {r for r in _BASE if r[0] % 7}, _NO_META,
+    ),
+    "optimize": (
+        None, lambda t, df: t.optimize(target_files=2), "optimize",
+        _BASE | {_STOLEN}, _NO_META,
+    ),
+    "restore": (
+        lambda t: t.delete_where(F.col("k") < 10),
+        lambda t, df: t.restore(0), "restore", _BASE, _NO_META,
+    ),
+    "rename_column": (
+        None, lambda t, df: t.rename_column("val", "name"),
+        "renameColumn", _BASE | {_STOLEN}, _NO_META,
+    ),
+    "add_constraint": (
+        None, lambda t, df: t.add_constraint("pos", "k >= 0"),
+        "setConstraint", _BASE | {_STOLEN}, ({"pos": "k >= 0"}, {}),
+    ),
+    "drop_constraint": (
+        lambda t: t.add_constraint("pos", "k >= 0"),
+        lambda t, df: t.drop_constraint("pos"), "dropConstraint",
+        _BASE | {_STOLEN}, _NO_META,
+    ),
+    "set_generated_column": (
+        None, lambda t, df: t.set_generated_column("val", _GEN),
+        "setGenerated", _BASE | {_STOLEN}, ({}, {"val": _GEN}),
+    ),
+    "drop_generated_column": (
+        lambda t: t.set_generated_column("val", _GEN),
+        lambda t, df: t.drop_generated_column("val"), "dropGenerated",
+        _BASE | {_STOLEN}, _NO_META,
+    ),
+}
+
+
 class TestConcurrentWriters:
     """Two real threads racing merges through the OCC retry loop: no
     lost update, and the version history is linear (every version slot
@@ -462,7 +525,7 @@ class TestConcurrentWriters:
                     src = spark.createDataFrame(
                         [(key, f"{tag}{i}")], "k INT, val STRING"
                     )
-                    tbl.merge(src, ["k"], max_retries=40)
+                    tbl.merge(src, ["k"])
             except Exception as exc:  # pragma: no cover - failure path
                 errors.append(exc)
 
@@ -492,7 +555,7 @@ class TestConcurrentWriters:
             src = spark.createDataFrame(
                 [(7, f"UPD-{tag}")], "k INT, val STRING"
             )
-            results[tag] = tbl.merge(src, ["k"], max_retries=40)
+            results[tag] = tbl.merge(src, ["k"])
 
         ts = [threading.Thread(target=writer, args=(t,)) for t in "xy"]
         for t in ts:
@@ -507,45 +570,71 @@ class TestConcurrentWriters:
 
 
 
-    def test_optimize_retries_on_concurrent_append(
-        self, spark, tbl, monkeypatch
+    @pytest.mark.parametrize("case", sorted(_RACED))
+    def test_lost_race_rederives_on_new_head(
+        self, spark, tbl, monkeypatch, case
     ):
-        """Deterministic witness for the optimize docstring's claim
-        (r9 verdict item 5): a concurrent append landing between
-        OPTIMIZE's snapshot read and its commit makes the compaction
-        commit LOSE the OCC race cleanly and retry against the new
-        snapshot -- the landed optimize removes exactly its
-        predecessor version's file set (appended rows included), and
-        no row is lost to the file-set swap."""
+        """Every committing op goes through the one OCC loop: a real
+        append steals the op's version slot on its first attempt, so
+        the op loses the race, re-reads the new head, re-derives
+        against it (the stolen row is merged, deleted, compacted or
+        rolled back like any other) and lands at the next slot."""
+        setup, op, logged, want, meta = _RACED[case]
+        if setup is not None:
+            setup(tbl)
+        head = tbl.latest_version()
         real_write = TxTable._write_commit
         injected = {"done": False}
 
         def racing_write(self, version, record):
-            if record.get("op") == "optimize" and not injected["done"]:
+            if record["op"] == logged and not injected["done"]:
                 injected["done"] = True
-                # a real append steals the version slot first
-                tbl.append(
-                    spark.createDataFrame(
-                        [(777, "stolen")], "k INT, val STRING"
-                    )
-                )
+                tbl.append(spark.createDataFrame([_STOLEN], _SCHEMA))
             real_write(self, version, record)
 
         monkeypatch.setattr(TxTable, "_write_commit", racing_write)
-        v_opt = tbl.optimize(target_files=2, max_retries=5)
+        v = op(tbl, lambda rows: spark.createDataFrame(rows, _SCHEMA))
+        monkeypatch.undo()
         assert injected["done"]
-        # the append won slot 1; the retried optimize landed after it
-        assert v_opt == 2
-        ops = [h["op"] for h in tbl.history()]
-        assert ops == ["create", "append", "optimize"]
-        # retried against the NEW snapshot: removes == the full file
-        # set of the version it compacted, appended file included
-        with open(tbl._commit_path(v_opt)) as f:
-            rec = json.load(f)
-        assert sorted(rec["removes"]) == sorted(tbl._replay(v_opt - 1)["files"])
-        assert len(tbl._replay(v_opt)["files"]) == 2
-        rows = _rows(tbl.snapshot())
-        assert rows == {(i, f"v{i}") for i in range(100)} | {(777, "stolen")}
+        # the append won slot head+1; the retried op landed after it
+        assert v == head + 2
+        hist = tbl.history()
+        assert [h["version"] for h in hist] == list(range(v + 1))
+        assert [h["op"] for h in hist][-2:] == ["append", logged]
+        assert {tuple(r) for r in tbl.snapshot().collect()} == want
+        assert (tbl.constraints(), tbl.generated_columns()) == meta
+        if case == "rename_column":
+            assert tbl.snapshot().columns == ["k", "name"]
+        if case == "optimize":
+            # removes == the full file set of the version it compacted,
+            # appended file included
+            with open(tbl._commit_path(v)) as f:
+                rec = json.load(f)
+            assert sorted(rec["removes"]) == sorted(tbl._replay(v - 1)["files"])
+            assert len(tbl._replay(v)["files"]) == 2
+
+    def test_exhausted_race_budget_publishes_nothing(
+        self, spark, tbl, monkeypatch
+    ):
+        """A writer that loses every race gives up after exactly
+        COMMIT_ATTEMPTS attempts, publishes no version, and (for an
+        append) staged its data files once, not once per attempt."""
+        records: list[dict] = []
+
+        def always_lose(self, version, record):
+            records.append(record)
+            raise ConcurrentCommitError(f"version {version} taken")
+
+        monkeypatch.setattr(TxTable, "_write_commit", always_lose)
+        with pytest.raises(
+            ConcurrentCommitError, match=f"append lost {COMMIT_ATTEMPTS} "
+        ):
+            tbl.append(spark.createDataFrame([(500, "v500")], _SCHEMA))
+        monkeypatch.undo()
+        assert len(records) == COMMIT_ATTEMPTS
+        assert all(r["adds"] == records[0]["adds"] for r in records)
+        assert tbl.latest_version() == 0
+        assert tbl.count() == 100
 
     def test_optimize_races_live_appends(self, spark, tbl):
         """Real-thread OPTIMIZE vs a stream of appends: whatever the
@@ -569,7 +658,7 @@ class TestConcurrentWriters:
 
         def compactor():
             try:
-                tbl.optimize(target_files=2, max_retries=40)
+                tbl.optimize(target_files=2)
             except Exception as exc:  # pragma: no cover - failure path
                 errors.append(exc)
 
